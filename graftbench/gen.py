@@ -18,7 +18,7 @@ Same seed, same bytes. The page-view schedule is drawn from a constant
 seed on purpose: a schedule redrawn per seed moves page latency by more
 than any bound we could set (see README, design rule 3).
 
-Usage: python3 graftbench/gen.py --seed 7 --out /tmp/gb --workload serve_pages
+Usage: python3 graftbench/gen.py --seed 7 --out gb-inputs --workload refresh_load
 """
 
 from __future__ import annotations
@@ -35,7 +35,6 @@ SCHEDULE_SEED = 20250601
 
 # sizes per workload; the shares are the same everywhere
 SIZES = {
-    "serve_pages": {"base_rows": 100_000, "batches": 0, "batch_rows": 0, "docs": 0},
     "refresh_load": {"base_rows": 30_000, "batches": 2, "batch_rows": 6_000, "docs": 0},
     "corpus_curation": {"base_rows": 0, "batches": 0, "batch_rows": 0, "docs": 2_000},
 }
@@ -224,23 +223,22 @@ def gen_documents(seed: int, out: str, n_docs: int) -> None:
     )
 
 
-def gen_schedule(cycle: int = 24) -> list[dict]:
-    """The fixed page-view cycle: browse, source filter, category filter and
-    1-3-term search in turn, pages 1-8. Any four consecutive views hold one
-    of each kind; refresh_load's cycles reuse the first four, so its page
-    mix does not depend on how many cycles fit in the window."""
+def gen_schedule() -> list[dict]:
+    """The fixed page views of a refresh_load cycle, one of each kind in
+    turn: browse order, source filter, category filter, 1-3-term search,
+    on pages 1-8. Every cycle replays them, so the page mix does not
+    depend on how many cycles a window holds."""
     rng = np.random.default_rng(SCHEDULE_SEED)
     terms = [w.lower() for w in NAME_A + NAME_B + STREETS] + ["jazz", "comedy", "ave", "venue"]
     shapes = []
-    for i in range(cycle):
-        kind = i % 4
+    for kind in range(4):
         s = {"source": None, "category": None, "search": None, "page": int(rng.integers(1, 9))}
         if kind == 1:
             s["source"] = SOURCES[int(rng.integers(0, len(SOURCES)))]
         elif kind == 2:
             s["category"] = CATEGORIES[int(rng.integers(0, len(CATEGORIES)))]
         elif kind == 3:
-            n_terms = 1 + (i // 4) % 3
+            n_terms = int(rng.integers(1, 4))
             s["search"] = " ".join(terms[j] for j in rng.choice(len(terms), n_terms, replace=False).tolist())
             # a search narrows the result: keep it on its first pages
             s["page"] = 1 + s["page"] % 2

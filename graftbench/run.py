@@ -2,22 +2,22 @@
 
 Run from the root of a checkout:
 
-    python3 graftbench/run.py --workload refresh_load --seed 1 --seconds 16 --trace 0
+    python3 graftbench/run.py --workload refresh_load --seed 1 --seconds 10 --trace 0
 
 One run is one fresh process on local[$SPARK_GRAFT_CPUS] (default: the
 usable cores) with a single closed-loop client. It generates the
-workload's inputs from the seed (``gen.py``), sets up (session start,
-the starting state built through the program, a fixed number of warm-up
-ops), runs ops back to back for ``--seconds``, then checks the outputs
-against DuckDB twins (``oracles.py``). Diagnostics go to stdout as
-``# name value unit (n=samples)`` lines; the last line is one JSON
-object {correct, attempted, failed, metrics}.
+workload's inputs from the seed (``gen.py``), sets up (session start and
+a fixed number of warm-up ops, which build the starting state), runs ops
+back to back for ``--seconds`` and at least a fixed number of ops, then
+checks the outputs against DuckDB twins (``oracles.py``). Diagnostics go
+to stdout as ``# name value unit (n=samples)`` lines; the last line is
+one JSON object {correct, attempted, failed, metrics}.
 
 With ``--trace 0`` the metrics are the end-to-end ones. With
-``--trace 1`` the run also writes Spark's event log, times one untraced
-window, then one window with every public call wrapped in a span
-(``spans.py``), and reports per-layer metrics plus the tracing overhead;
-they are also written, with the spans, to
+``--trace 1`` the run also writes Spark's event log and runs one window
+of twice the length in which half the ops have each public call wrapped
+in a span (``spans.py``); it reports per-layer metrics plus the tracing
+overhead, and writes them, with the spans, to
 ``.graftbench_out/trace-<workload>-<seed>.json``.
 """
 
@@ -40,14 +40,14 @@ import oracles  # noqa: E402
 from spans import Trace, Tracer, read_event_log  # noqa: E402
 
 PACKAGE = "nashville_etl_service_backup_spark"
-WORKLOADS = ("serve_pages", "refresh_load", "corpus_curation")
-# starting-state builds per run (their median enters setup_s) and warm-up ops
-STATE_ROUNDS = 2
-WARMUP_OPS = {"serve_pages": 6, "refresh_load": 1, "corpus_curation": 2}
+WORKLOADS = ("refresh_load", "corpus_curation")
+# warm-up ops per run (README, design rule 2)
+WARMUP_OPS = {"refresh_load": 2, "corpus_curation": 1}
+# timed ops per window at the least, whatever the host speed, so a metric
+# is never a median over a sample whose size the host decides
+MIN_OPS = {"refresh_load": 2, "corpus_curation": 3}
 # refresh_load: page views after each append
 FRESH_PAGES = 2
-# serve_pages: leading timed page views whose outputs are checked
-CHECKED_PAGES = 12
 
 
 def calib_ms() -> float:
@@ -88,7 +88,6 @@ class Bench:
         """Settings the program reads from outside: cores, local dirs, the
         event log and a quiet console."""
         cpus = os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-        os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
         tmp = os.path.join(self.work, "tmp")
         for d in ("tmp", "local", "eventlog"):
             os.makedirs(os.path.join(self.work, d), exist_ok=True)
@@ -149,25 +148,16 @@ class Bench:
             return a["load_events"](self.spark, batch, self.sink, mode="overwrite")
 
     def setup(self) -> None:
+        """Session start and the warm-up ops; on refresh_load the first
+        warm-up cycle builds the starting sink."""
         t = time.perf_counter()
         self.start()
-        builds = []
-        if self.args.workload != "corpus_curation":
-            for _ in range(STATE_ROUNDS):
-                t0 = time.perf_counter()
-                self.refresh()
-                builds.append(time.perf_counter() - t0)
         t0 = time.perf_counter()
         for i in range(WARMUP_OPS[self.args.workload]):
             self.op(i, record=False)
-        warm = time.perf_counter() - t0
-        self.setup_s = self.session_start_s + _p50(builds) + warm
-        self.setup_n = max(len(builds), 1)
+        self.setup_s = time.perf_counter() - t
         self.note("setup.session_start_s", self.session_start_s, "s")
-        if builds:
-            self.note("setup.state_build_s", _p50(builds), "s", len(builds))
-        self.note("setup.warmup_s", warm, "s", WARMUP_OPS[self.args.workload])
-        self.note("setup.wall_s", time.perf_counter() - t, "s")
+        self.note("setup.warmup_s", time.perf_counter() - t0, "s", WARMUP_OPS[self.args.workload])
 
     # -- ops ---------------------------------------------------------------
 
@@ -197,16 +187,6 @@ class Bench:
 
     def op(self, i: int, record: bool = True) -> None:
         getattr(self, f"op_{self.args.workload}")(i, record)
-
-    def op_serve_pages(self, i: int, record: bool) -> None:
-        shape = self.schedule[i % len(self.schedule)]
-        dt, out = self.page_view(shape, op=i if record else None)
-        if record:
-            self.lat.append(dt)
-            self.work_units += 1
-            if i < CHECKED_PAGES:
-                cols, rows = out["page"]
-                self.samples.append((shape, dict(out, page=oracles.canon(cols, rows))))
 
     def op_refresh_load(self, i: int, record: bool) -> None:
         a, tr = self.api, self.tracer
@@ -276,14 +256,25 @@ class Bench:
 
     # -- timed window ------------------------------------------------------
 
-    def window(self, seconds: float) -> None:
-        self.lat, self.refresh_s, self.append_s, self.written = [], [], [], []
+    def window(self, seconds: float, min_ops: int, alternate: bool = False) -> None:
+        """Ops back to back until ``seconds`` have passed and at least
+        ``min_ops`` have run. With ``alternate`` half the ops run traced,
+        in the order untraced, traced, traced, untraced, ..., and their
+        latencies go to ``traced_lat``: both kinds share one stretch of
+        host speed, and a steady warm-up trend favours neither."""
+        self.lat, self.traced_lat, self.refresh_s, self.append_s, self.written = [], [], [], [], []
         self.work_units = 0
         t_end = time.perf_counter() + seconds
         i = 0
-        while time.perf_counter() < t_end:
+        while i < min_ops or time.perf_counter() < t_end or (alternate and i % 2):
+            self.tracer.enabled = alternate and i % 4 in (1, 2)
+            n = len(self.lat)
             self.op(i)
+            if self.tracer.enabled:
+                self.traced_lat += self.lat[n:]
+                del self.lat[n:]
             i += 1
+        self.tracer.enabled = False
         self.ops = i
 
     def busy_s(self) -> float:
@@ -295,12 +286,10 @@ class Bench:
 
     def end_to_end(self) -> dict:
         w = self.args.workload
-        unit = {"serve_pages": "page views", "refresh_load": "raw rows written",
-                "corpus_curation": "documents curated"}[w]
-        lat_name = {"serve_pages": "page view", "refresh_load": "fresh page view",
-                    "corpus_curation": "curation"}[w]
+        unit = {"refresh_load": "raw rows written", "corpus_curation": "documents curated"}[w]
+        lat_name = {"refresh_load": "fresh page view", "corpus_curation": "curation"}[w]
         self.note("op_latencies_ms " + " ".join(f"{x * 1000:.0f}" for x in self.lat), len(self.lat), "ops")
-        self.note("setup_s", self.setup_s, "s", self.setup_n)
+        self.note("setup_s", self.setup_s, "s")
         self.note(f"op_p50_ms ({lat_name})", _p50(self.lat) * 1000, "ms", len(self.lat))
         self.note(f"work_per_s ({unit})", self.work_units / self.busy_s(), "1/s", self.ops)
         if w == "refresh_load":
@@ -321,9 +310,7 @@ class Bench:
     def check(self) -> None:
         w = self.args.workload
         self.attempted = self.ops
-        if w == "serve_pages":
-            errors = oracles.check_pages(self.sink, self.samples)
-        elif w == "refresh_load":
+        if w == "refresh_load":
             size = gen.SIZES[w]
             raws = ["raw_base.parquet"] + [f"raw_batch_{k}.parquet" for k in range(size["batches"])]
             errors, per_seq = oracles.check_sink([os.path.join(self.inputs, r) for r in raws], self.sink)
@@ -333,21 +320,21 @@ class Bench:
         else:
             errors = oracles.check_curation(self.inputs, self.curation_oracle, self.samples)
         self.failures = errors
-        # a failed check fails the ops it covers: one op per failed sample,
-        # every op when the shared output (sink or curation result) is wrong
+        # the sink and the curation result are shared by every op: a failed
+        # check fails them all
         if errors:
-            self.failed = self.ops if w != "serve_pages" else min(self.ops, len(errors))
+            self.failed = self.ops
 
     # -- traced window -----------------------------------------------------
 
-    def enable_tracing(self) -> None:
+    def install_tracing(self) -> None:
         """Swap every public call for a span-recording wrapper, including
-        the two dedup stages inside the curation query."""
+        the two dedup stages inside the curation query. The wrappers record
+        only while ``tracer.enabled`` is set."""
         from nashville_etl_service_backup_spark.operators import dedup
         from nashville_etl_service_backup_spark.queries import llmdata
 
         tr = self.tracer
-        tr.enabled = True
         layer = {"run_pipeline": "canonicalize", "parse_raw": "canonicalize", "load_events": "load",
                  "llm_corpus_curation": "curation"}
         self.api = {k: tr.wrap(f"{layer.get(k, 'serving')}.{k}", fn) for k, fn in self.api.items()}
@@ -373,8 +360,7 @@ class Bench:
                    and s["op"] is not None]
         pages = recorded("page_view")
         curs = recorded("curation")
-        ops = recorded({"serve_pages": "page_view", "refresh_load": "cycle",
-                        "corpus_curation": "curation"}[self.args.workload])
+        ops = recorded({"refresh_load": "cycle", "corpus_curation": "curation"}[self.args.workload])
         serving_calls = ("serving.query_events", "serving.count_with_filters", "serving.distinct_values")
         m = {
             "session.start_s": (self.session_start_s, "s"),
@@ -455,15 +441,15 @@ def run(args, root: str) -> dict:
             bench.schedule = json.load(f)
         bench.configure()
         bench.setup()
-        bench.window(args.seconds)
-        metrics = bench.end_to_end()
         if args.trace:
-            untraced_ms = metrics["op_p50_ms"]["value"]
-            ops = bench.ops
-            bench.enable_tracing()
-            bench.window(args.seconds)
-            bench.ops += ops
-            traced_ms = _p50(bench.lat) * 1000
+            bench.install_tracing()
+            bench.window(2 * args.seconds, 2 * MIN_OPS[args.workload], alternate=True)
+            untraced_ms, traced_ms = _p50(bench.lat) * 1000, _p50(bench.traced_lat) * 1000
+            bench.note("trace.untraced_op_ms", untraced_ms, "ms", len(bench.lat))
+            bench.note("trace.traced_op_ms", traced_ms, "ms", len(bench.traced_lat))
+        else:
+            bench.window(args.seconds, MIN_OPS[args.workload])
+            metrics = bench.end_to_end()
         bench.check()
         bench.note("host.calib_ms.end", calib_ms(), "ms")
         log_dir = os.path.join(work, "eventlog")
