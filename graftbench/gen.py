@@ -224,10 +224,10 @@ def gen_documents(seed: int, out: str, n_docs: int) -> None:
 
 
 def gen_schedule() -> list[dict]:
-    """The fixed page views of a refresh_load cycle, one of each kind in
+    """The fixed page views of refresh_load, one of each kind in
     turn: browse order, source filter, category filter, 1-3-term search,
-    on pages 1-8. Every cycle replays them, so the page mix does not
-    depend on how many cycles a window holds."""
+    on pages 1-8. The cycles of a run view them in a fixed rotation, so
+    the page mix is the same in every run."""
     rng = np.random.default_rng(SCHEDULE_SEED)
     terms = [w.lower() for w in NAME_A + NAME_B + STREETS] + ["jazz", "comedy", "ave", "venue"]
     shapes = []

@@ -15,8 +15,8 @@ one JSON object {correct, attempted, failed, metrics}.
 
 With ``--trace 0`` the metrics are the end-to-end ones. With
 ``--trace 1`` the run also writes Spark's event log and runs one window
-of twice the length in which half the ops have each public call wrapped
-in a span (``spans.py``); it reports per-layer metrics plus the tracing
+in which half the ops have each public call wrapped in a span
+(``spans.py``); it reports per-layer metrics plus the tracing
 overhead, and writes them, with the spans, to
 ``.graftbench_out/trace-<workload>-<seed>.json``.
 """
@@ -42,12 +42,10 @@ from spans import Trace, Tracer, read_event_log  # noqa: E402
 PACKAGE = "nashville_etl_service_backup_spark"
 WORKLOADS = ("refresh_load", "corpus_curation")
 # warm-up ops per run (README, design rule 2)
-WARMUP_OPS = {"refresh_load": 2, "corpus_curation": 1}
+WARMUP_OPS = {"refresh_load": 1, "corpus_curation": 2}
 # timed ops per window at the least, whatever the host speed, so a metric
 # is never a median over a sample whose size the host decides
-MIN_OPS = {"refresh_load": 2, "corpus_curation": 3}
-# refresh_load: page views after each append
-FRESH_PAGES = 2
+MIN_OPS = {"refresh_load": 4, "corpus_curation": 3}
 
 
 def calib_ms() -> float:
@@ -208,13 +206,14 @@ class Bench:
                 if tr.enabled and record:
                     self.probe["files_written"].append(self._files() - files0)
                     self.probe["new_row_ratio"].append(written[-1] / size["batch_rows"])
-                for j in range(FRESH_PAGES):
-                    shape = self.schedule[k * FRESH_PAGES + j]
-                    dt, out = self.page_view(shape, op=op)
-                    fresh.append(dt)
-                    if k == size["batches"] - 1:
-                        cols, rows = out["page"]
-                        last.append((shape, dict(out, page=oracles.canon(cols, rows))))
+                # one page view per append; the shape rotates so that four
+                # cycles view every shape once after each append
+                shape = self.schedule[(i + k * len(self.schedule) // size["batches"]) % len(self.schedule)]
+                dt, out = self.page_view(shape, op=op)
+                fresh.append(dt)
+                if k == size["batches"] - 1:
+                    cols, rows = out["page"]
+                    last.append((shape, dict(out, page=oracles.canon(cols, rows))))
         if tr.enabled and record:
             self.probe_canonicalize(os.path.join(self.inputs, "raw_base.parquet"), op)
         if record:
@@ -223,7 +222,7 @@ class Bench:
             self.append_s.append(append_s)
             self.work_units += size["base_rows"] + size["batches"] * size["batch_rows"]
             self.written.append(written)
-            self.samples = last
+            self.samples += last
 
     def op_corpus_curation(self, i: int, record: bool) -> None:
         a, tr = self.api, self.tracer
@@ -443,7 +442,7 @@ def run(args, root: str) -> dict:
         bench.setup()
         if args.trace:
             bench.install_tracing()
-            bench.window(2 * args.seconds, 2 * MIN_OPS[args.workload], alternate=True)
+            bench.window(args.seconds, MIN_OPS[args.workload], alternate=True)
             untraced_ms, traced_ms = _p50(bench.lat) * 1000, _p50(bench.traced_lat) * 1000
             bench.note("trace.untraced_op_ms", untraced_ms, "ms", len(bench.lat))
             bench.note("trace.traced_op_ms", traced_ms, "ms", len(bench.traced_lat))
