@@ -26,6 +26,9 @@ gates):
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -83,6 +86,17 @@ def canonicalize_bronze(parsed: DataFrame) -> DataFrame:
     """Dispatch + project from the PARSED bronze frame (source_spider
     string, r struct<RAW_ITEM_SCHEMA>) — everything in
     :func:`canonicalize` after the from_json."""
+    key, projection, valid = _dispatch_exprs(SparkContext._gateway)
+    out = parsed.withColumn("_k", key).filter(F.col("_k").isNotNull())
+    return out.select(*projection).filter(valid).drop("_k")
+
+
+@functools.lru_cache(maxsize=4)
+def _dispatch_exprs(gateway) -> tuple[Column, tuple[Column | str, ...], Column]:
+    """The dispatch key, the canonical projection and the validity
+    gate. They name their input columns only, so they fit any parsed
+    bronze frame; keyed on the py4j gateway, so no cached Column
+    outlives the JVM that holds it."""
     s = F.col("source_spider")
     r = F.col("r")
 
@@ -155,7 +169,7 @@ def canonicalize_bronze(parsed: DataFrame) -> DataFrame:
         F.regexp_replace(cat_raw, "_", " "),
     ).otherwise(cat_raw)
 
-    out = parsed.withColumn("_k", key).filter(F.col("_k").isNotNull()).select(
+    projection = (
         "source_spider",
         "_k",
         r["name"].alias("name"),
@@ -182,28 +196,26 @@ def canonicalize_bronze(parsed: DataFrame) -> DataFrame:
         .when(F.col("_k") == "pdf", _nonempty(F.col("url")))
         .otherwise(F.lit(True))
     )
-    return out.filter(valid).drop("_k")
+    return key, projection, valid
 
 
 def standardize(canonical: DataFrame, now_year: int | None = None) -> DataFrame:
     """The transformer stage (transformer.py:8-31): standardize dates,
     venue names, prices; categorize with the trusted-source gate. Expects
     canonicalize() output (with source_spider + price_raw)."""
-    df = canonical.withColumn(
-        "event_date",
-        standardize_date(F.col("event_date"), F.col("source_spider"), now_year),
-    ).withColumn("venue_name", standardize_venue_name(F.col("venue_name")))
-    df = df.withColumn("price", standardize_price(F.col("price_raw")))
-    # stage the combined lowered text ONCE: the categorize cascade
-    # references it once per keyword contains, and CollapseProject
-    # keeps the staging projection separate because the alias is
-    # expensive and multiply-referenced (the _raw_zone staging device)
-    df = df.withColumn(
-        "_combined",
-        _categorize_combined(
-            F.col("name"), F.col("description"), F.col("venue_name")
-        ),
-    )
+    df = canonical
+    for name, c in _standardize_exprs(SparkContext._gateway, now_year):
+        df = df.withColumn(name, c)
+    return df.select(*EVENT_FIELDS)
+
+
+@functools.lru_cache(maxsize=8)
+def _standardize_exprs(
+    gateway, now_year: int | None
+) -> tuple[tuple[str, Column], ...]:
+    """The standardize stage as (column, expression) steps, applied in
+    order, cached like :func:`_dispatch_exprs`. now_year=None stays
+    year(current_date()), which is evaluated when the query runs."""
     cat, gen = categorize_with_trust_gate(
         F.col("source_spider"),
         F.col("category"),
@@ -214,9 +226,24 @@ def standardize(canonical: DataFrame, now_year: int | None = None) -> DataFrame:
         combined=F.col("_combined"),
     )
     return (
-        df.withColumn("category", cat)
-        .withColumn("genre", gen)
-        .select(*EVENT_FIELDS)
+        (
+            "event_date",
+            standardize_date(F.col("event_date"), F.col("source_spider"), now_year),
+        ),
+        ("venue_name", standardize_venue_name(F.col("venue_name"))),
+        ("price", standardize_price(F.col("price_raw"))),
+        # stage the combined lowered text ONCE: the categorize cascade
+        # references it once per keyword contains, and CollapseProject
+        # keeps the staging projection separate because the alias is
+        # expensive and multiply-referenced (the _raw_zone staging device)
+        (
+            "_combined",
+            _categorize_combined(
+                F.col("name"), F.col("description"), F.col("venue_name")
+            ),
+        ),
+        ("category", cat),
+        ("genre", gen),
     )
 
 
@@ -231,7 +258,9 @@ def run_pipeline(raw: DataFrame, now_year: int | None = None) -> DataFrame:
     fused directly onto the scan they exceed the JVM's 64 KB method
     limit and force an interpreted fallback. Standardize is
     deterministic per row, so the result is identical either side of
-    the dedup."""
+    the dedup.
+
+    Expressions are cached per JVM and now_year (a rebuild is ~4,700 py4j calls)."""
     return standardize(canonicalize(raw).dropDuplicates(["url"]), now_year)
 
 

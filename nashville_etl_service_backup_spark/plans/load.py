@@ -13,9 +13,8 @@ the anti-join co-partitions instead of shuffling the full batch.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -50,29 +49,33 @@ def load_events(
     sink_path: str,
     mode: str = "append",
 ) -> int:
-    """Dedup-append the batch into the curated events sink. Returns the
-    number of rows written. mode='overwrite' gives K4 (full refresh)."""
-    if mode == "overwrite" or not _sink_exists(spark, sink_path):
-        out = batch.dropDuplicates(["url"])
-        out.write.mode("overwrite").parquet(sink_path)
-        return _count_parquet(spark, sink_path)
-    existing = spark.read.parquet(sink_path)
+    """Dedup-append the batch into the curated events parquet sink at
+    `sink_path` (a local path or any Hadoop URI). mode='overwrite' gives
+    K4 (full refresh); an append to an absent sink creates it. Returns
+    the number of rows written, observed on the write itself."""
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
+    existing = None if mode == "overwrite" else _existing_keys(spark, sink_path)
     fresh = dedup_new_rows(batch, existing)
-    # cheap count via a cached narrow frame would re-run the plan; the
-    # write itself is the action, count read back from the sink delta
-    before = existing.count()
-    fresh.write.mode("append").parquet(sink_path)
-    return _count_parquet(spark, sink_path) - before
-
-
-def _sink_exists(spark: SparkSession, path: str) -> bool:
-    return os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
+    obs = Observation()
+    fresh.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode).parquet(
+        sink_path
     )
+    return obs.get["rows"]
 
 
-def _count_parquet(spark: SparkSession, path: str) -> int:
-    return spark.read.parquet(path).count()
+def _existing_keys(spark: SparkSession, sink_path: str) -> DataFrame | None:
+    """The sink's url column, or None when the sink does not exist yet.
+    The explicit schema skips a schema-inference job. Only PATH-ABSENT
+    means cold start; any other read failure (permissions, transient FS
+    error) re-raises: falling through would skip the anti-join and
+    double-append."""
+    try:
+        return spark.read.schema("url STRING").parquet(sink_path)
+    except AnalysisException as exc:
+        if "PATH_NOT_FOUND" not in str(exc) and "does not exist" not in str(exc):
+            raise
+        return None
 
 
 def export_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:

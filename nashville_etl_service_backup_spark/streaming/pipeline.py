@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from nashville_etl_service_backup_spark.plans.canonicalize import run_pipeline
-from nashville_etl_service_backup_spark.plans.load import dedup_new_rows
+from nashville_etl_service_backup_spark.plans.load import load_events
 from nashville_etl_service_backup_spark.schemas import RAW_ZONE_SCHEMA
 
 
@@ -52,19 +52,7 @@ def incremental_etl(
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         events = run_pipeline(batch, now_year=now_year)
-        # only PATH-ABSENT means cold start; any other read failure
-        # (permissions, transient FS error) must re-raise — falling
-        # through would silently skip the anti-join and double-append
-        # (the same failure class the round-2 ADVICE flagged on the
-        # JDBC upsert's existing-keys probe)
-        try:
-            existing = batch.sparkSession.read.parquet(sink_path)
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" not in str(exc) and "does not exist" not in str(exc):
-                raise
-            existing = None
-        fresh = dedup_new_rows(events, existing)
-        fresh.write.mode("append").parquet(sink_path)
+        load_events(batch.sparkSession, events, sink_path, mode="append")
 
     return (
         raw_zone_stream(spark, raw_path)

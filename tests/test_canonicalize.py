@@ -105,6 +105,34 @@ def test_run_pipeline_dedups_on_url(raw_zone):
     assert out.count() == 8
 
 
+def test_run_pipeline_expression_cache_keys_on_now_year(spark):
+    """The cached standardize expressions are keyed on now_year: the
+    nashville.com branch injects it into the parsed date."""
+    raw = _raw(spark, [
+        ("nashville.com-events", {"name": "Fall Fest", "url": "https://n/1",
+                                  "venue_name": "Park",
+                                  "event_date": "October 2 @ 8:00 pm"}),
+    ])
+    d24 = run_pipeline(raw, now_year=2024).collect()[0].event_date
+    d25 = run_pipeline(raw, now_year=2025).collect()[0].event_date
+    assert d24.startswith("2024-10-02T20:00:00")
+    assert d25.startswith("2025-10-02T20:00:00")
+
+
+def test_run_pipeline_repeat_calls_identical(raw_zone):
+    """A second call reuses the cached expressions (no new build) and
+    returns the same rows."""
+    from nashville_etl_service_backup_spark.plans import canonicalize as C
+
+    first = run_pipeline(raw_zone, now_year=2025).collect()
+    misses = (C._dispatch_exprs.cache_info().misses,
+              C._standardize_exprs.cache_info().misses)
+    second = run_pipeline(raw_zone, now_year=2025).collect()
+    assert (C._dispatch_exprs.cache_info().misses,
+            C._standardize_exprs.cache_info().misses) == misses
+    assert sorted(second, key=lambda r: r.url) == sorted(first, key=lambda r: r.url)
+
+
 def test_dedup_new_rows_anti_join(spark, raw_zone):
     batch = run_pipeline(raw_zone, now_year=2025)
     existing = batch.filter(F.col("url").isin("https://tm/1", "https://sg/1"))
