@@ -3,33 +3,68 @@ similarity search, text analysis."""
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 
 
-# Persisted frames created inside operators (LSH/n-gram/embedding
-# signature stages). Queries are lazy, so the operator cannot unpersist
-# before its caller materializes the result; instead every persist is
-# registered here and the caller (bench loop, long-running service,
-# tests) calls release_persisted() once the result is consumed. Without
-# this, each dedup query would leak its cached signature frame for the
-# session's lifetime.
-_PERSISTED: list[DataFrame] = []
+# Frames materialized inside operators: persisted signature stages and
+# the eager local checkpoints at the dedup barriers. Queries are lazy,
+# so the operator cannot free them before its caller materializes the
+# result; instead each one registers its release here and the caller
+# (bench loop, long-running service, tests) calls release_persisted()
+# once the result is consumed. Without this, each dedup query would
+# leak its cached frames for the session's lifetime.
+_PERSISTED: list[Callable[[], object]] = []
 
 
 def track_persist(df: DataFrame) -> DataFrame:
     """persist() + register for later release_persisted()."""
     df.persist()
-    _PERSISTED.append(df)
+    _PERSISTED.append(df.unpersist)
     return df
 
 
+def _checkpoint_rdd(cp: DataFrame):
+    # A localCheckpoint()'s blocks belong to the RDD under its
+    # LogicalRDD leaf; DataFrame.unpersist() does not reach them.
+    return cp._jdf.queryExecution().analyzed().rdd()
+
+
+def free_checkpoint(cp: DataFrame) -> None:
+    """Drop a localCheckpoint()'s blocks now. Any frame still derived
+    from ``cp`` can no longer be computed afterwards."""
+    _checkpoint_rdd(cp).unpersist(False)
+
+
+def register_checkpoint(cp: DataFrame) -> DataFrame:
+    """Register an existing localCheckpoint() for release_persisted()."""
+    rdd = _checkpoint_rdd(cp)
+    _PERSISTED.append(lambda: rdd.unpersist(False))
+    return cp
+
+
+def track_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint() + register for release_persisted().
+
+    A materialization barrier that also cuts the lineage: every later
+    plan starts from a leaf instead of re-analyzing and re-planning all
+    of ``df``'s upstream plan, as a persist()ed frame makes each
+    consumer do. Under AQE the leaf reports no output partitioning."""
+    return register_checkpoint(df.localCheckpoint())
+
+
 def release_persisted() -> int:
-    """Unpersist every operator-cached frame; returns how many."""
+    """Free every operator-cached frame and checkpoint; returns how many.
+
+    Call it only once the results that used them are consumed: a frame
+    derived from a released checkpoint cannot be recomputed (Spark
+    raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
     n = 0
     while _PERSISTED:
-        df = _PERSISTED.pop()
+        release = _PERSISTED.pop()
         try:
-            df.unpersist()
+            release()
             n += 1
         except Exception:
             pass
@@ -47,8 +82,21 @@ def spread(df: DataFrame, factor: int = 2) -> DataFrame:
     input is a many-file scan with splits ≥ cores, and an unconditional
     extra shuffle of raw text there is not free — so a well-partitioned
     input passes through untouched (plan shows no extra Exchange; pinned
-    by tests/test_plans.py::test_spread_noop_on_wide_input). The
-    partition probe plans the upstream stage but runs no job."""
+    by tests/test_plans.py::test_spread_noop_on_wide_input).
+
+    The partition probe (``df.rdd``) runs no job on a scan or a
+    checkpoint, but under AQE it materializes every unmaterialized
+    shuffle or cache stage upstream: on a persisted funnel output it
+    ran the whole funnel (2 jobs, about 2.2 s at 2000 docs).
+
+    Catalyst pushes deterministic Filters below the round-robin
+    Exchange added here, so filters written after spread() (including
+    ones that call a Python UDF) still run in the scan's tasks. On
+    llm_corpus_curation the pre-filter, the Arrow repetition UDF and
+    the late-verdict filter all ran in the scan's single task (1.78 s);
+    a CollectMetrics barrier that kept them above the Exchange spread
+    them over 8 tasks but gained only about 10%, because each task pays
+    its own Python worker cost."""
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df

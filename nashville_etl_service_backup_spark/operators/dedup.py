@@ -189,14 +189,15 @@ def lsh_near_dup_pairs(
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard ≥ threshold.
     """
     # The signature frame feeds three plan branches (band explode + both
-    # sides of the verify join): persist it so the signature pipeline
-    # runs once, not 4×. At 100 TB this is the standard "materialize
-    # signatures" stage of an LSH dedup (disk-backed, partitioned).
-    # Registered for release_persisted() — the caller frees it after
-    # consuming the (lazy) result.
-    from nashville_etl_service_backup_spark.operators import track_persist
+    # sides of the verify join): checkpoint it so the signature pipeline
+    # runs once, not 4×, and so no later plan carries the upstream
+    # lineage. At 100 TB this is the standard "materialize signatures"
+    # stage of an LSH dedup (disk-backed, partitioned). Registered for
+    # release_persisted() — the caller frees it after consuming the
+    # (lazy) result.
+    from nashville_etl_service_backup_spark.operators import track_checkpoint
 
-    base = track_persist(
+    base = track_checkpoint(
         _signature_frame(df, id_col, text_col, shingle_n, num_hashes, bands)
     )
     # candidate generation: explode bands, equi-join on (band_idx, hash)
@@ -498,34 +499,51 @@ def connected_components(
     decision needs the transitive closure, not the raw pairs.
 
     Scale shape: each iteration shuffles only (node, label) pairs —
-    never document content — via one equi-join + one min-groupBy, both
-    map-side combinable. Label propagation converges in O(cluster
-    diameter) iterations; near-dup clusters are shallow (dozens of
-    docs), so 3-5 iterations in practice. `localCheckpoint` truncates
-    the growing lineage each round (on a real cluster, checkpoint to
-    durable storage instead). Driver participates only in the
-    convergence test (a scalar aggregate per round) — no row data ever
-    reaches the driver.
+    never document content — via one equi-join of the edges with the
+    labels, unioned with the labels themselves (each node's closed
+    neighbourhood), and one min-groupBy, both map-side combinable.
+    Label propagation converges in O(cluster diameter) iterations;
+    near-dup clusters are shallow (dozens of docs), so 3-5 iterations
+    in practice. Driver participates only in
+    the convergence test (a scalar aggregate per round) — no row data
+    ever reaches the driver.
+
+    Barriers: the symmetric edge list is compacted by a hash
+    repartition on src and materialized as an eager ``localCheckpoint``
+    (on a real cluster, checkpoint to durable storage instead), so each
+    round's plan starts from a lineage-free leaf instead of re-planning
+    the pair producer (LSH, the funnel) once per round. Under AQE a
+    checkpoint reports UnknownPartitioning, so each round still
+    shuffles the edges for its join. The labels start with round 1
+    already applied, least(src, min(dst)) per src, which reaches the
+    same fixed point one round sooner than lbl = node. Each round's
+    labels are a lazy checkpoint, materialized by the round's
+    convergence sum; the superseded round's labels are freed once the
+    next round's sum has run, the edges when the loop ends, and the
+    final labels are registered for release_persisted().
     """
+    from nashville_etl_service_backup_spark.operators import (
+        free_checkpoint,
+        register_checkpoint,
+    )
+
     e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    # hash-partition by src ONCE before persisting: every round's
-    # label join is keyed on src, so the persisted partitioning is
-    # reused and only the (node, label) table moves per round
     edges = (
         e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .repartition("src")
-        .persist()
+        .localCheckpoint()
     )
     # lazy checkpoints (pagerank's device, round 10): the convergence
-    # probe's collect is the round's ONLY action — it materializes the
-    # checkpoint as a side effect, so each round costs one submitted
-    # job instead of two (eager checkpoint + separate sum).
+    # probe's collect materializes the checkpoint's last stage as a side
+    # effect, instead of an eager checkpoint job plus a separate sum.
+    # Under AQE the localCheckpoint call itself still runs every
+    # upstream shuffle stage (the plan is finalized to build the RDD).
     labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
+        edges.groupBy("src")
+        .agg(F.least(F.col("src"), F.min("dst")).alias("lbl"))
+        .withColumnRenamed("src", "node")
         .localCheckpoint(eager=False)
     )
     # labels are monotonically non-increasing, so sum(lbl) strictly
@@ -539,28 +557,28 @@ def connected_components(
         # tables are small enough that the planner already picks
         # broadcast/efficient strategies; forcing a shuffle can only
         # lose, the BFS lesson). cc_bfs_hint_probe.json.
-        nbr = (
+        #
+        # the closed neighbourhood in ONE aggregate (the node's own label
+        # unioned with its neighbours'): a second join back to the labels
+        # would cost two more shuffles per round, because the checkpoints
+        # carry no partitioning under AQE
+        nxt = (
             edges.join(labels, edges["src"] == labels["node"])
-            .groupBy("dst")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-            .withColumnRenamed("dst", "node")
-        )
-        labels = (
-            labels.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))
-                ).alias("lbl"),
-            )
+            .select(F.col("dst").alias("node"), "lbl")
+            .unionByName(labels)
+            .groupBy("node")
+            .agg(F.min("lbl").alias("lbl"))
             .localCheckpoint(eager=False)
         )
-        cur_sum = labels.agg(F.sum("lbl")).collect()[0][0]
+        cur_sum = nxt.agg(F.sum("lbl")).collect()[0][0]
+        free_checkpoint(labels)
+        labels = nxt
         if cur_sum == prev_sum:
             converged = True
             break
         prev_sum = cur_sum
-    edges.unpersist()
+    free_checkpoint(edges)
+    register_checkpoint(labels)
     if not converged:
         # labels are still moving: some cluster has diameter > max_iter
         # and the returned components are WRONG (split clusters). Loudly

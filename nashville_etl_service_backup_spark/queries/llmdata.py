@@ -1102,19 +1102,21 @@ def llm_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Every stage is a previously-verified operator; this query pins
     their COMPOSITION (the funnel's survivors feed the dedup, the
-    keep-set feeds the split) — at 100 TB the stages chain without
-    materialization barriers except the LSH signature persist the pair
-    stage already owns."""
-    from nashville_etl_service_backup_spark.operators import track_persist
+    keep-set feeds the split). Its materialization barriers are eager
+    local checkpoints: the kept set here, the LSH signatures and the
+    connected-components edge list inside the operators. Each later
+    plan starts from a checkpoint leaf instead of re-planning the
+    funnel and LSH lineage."""
+    from nashville_etl_service_backup_spark.operators import track_checkpoint
 
     docs = spread(load(spark, sf_dir, "documents"))
     _, survivors = _funnel_split(docs, keep_cols=("doc_id", "lang"))
     # three downstream stages consume the kept set (LSH signatures, the
-    # resolve anti-join's left side, the split/token aggregate) — persist
-    # it once, or the funnel's Arrow UDF re-runs per consumer. This is
-    # the materialization barrier a real pipeline puts between "curated
-    # corpus" and everything derived from it.
-    kept = track_persist(
+    # resolve anti-join's left side, the split/token aggregate) —
+    # checkpoint it once, or the funnel's Arrow UDF re-runs per consumer.
+    # This is the materialization barrier a real pipeline puts between
+    # "curated corpus" and everything derived from it.
+    kept = track_checkpoint(
         survivors.filter(F.col("late_verdict") == "kept").select(
             "doc_id", "lang", "text"
         )
@@ -3917,8 +3919,9 @@ def dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     set semantics (measured +1 s at sf0.1), and the round-3
     semi-join + three-persisted-count-branch formulation re-derived
     finders under concurrent branch materialization — the round-4
-    bench drift. Both finders' subtrees are independent leaves of one
-    job, so they scan concurrently."""
+    bench drift. The LSH finder's signature frame is an eager
+    checkpoint, built when the query is; the exact finder's subtree
+    runs in the query's own job."""
     from nashville_etl_service_backup_spark.operators.dedup import (
         lsh_near_dup_pairs,
         prefix_filter_jaccard_pairs,

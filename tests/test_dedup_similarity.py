@@ -169,6 +169,45 @@ def test_resolve_duplicates_keeps_representatives(spark):
     assert kept == {1, 3, 4, 6, 7, 8, 10}
 
 
+def test_connected_components_matches_union_find(spark):
+    """The label seed already applies round 1 (least(src, min(dst))):
+    same components as a union-find on a 6-chain, a star and two
+    disjoint pairs, and the job budget pins the folded round."""
+    from nashville_etl_service_backup_spark.operators.dedup import (
+        connected_components,
+    )
+
+    chain = [(i, i + 1) for i in range(1, 6)]
+    star = [(10, 14), (10, 11), (10, 13), (10, 12)]
+    edges = chain + star + [(21, 20), (30, 31)]
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {n: find(n) for n in parent}
+
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    sc = spark.sparkContext
+    group = "test-cc-union-find"
+    sc.setJobGroup(group, "connected_components")
+    try:
+        got = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == want
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    # 36 jobs; the earlier lbl = node seed over persisted edges, with a
+    # second label join per round, launched 39
+    assert len(jobs) <= 36, jobs
+
+
 def test_connected_components_empty_pairs(spark):
     from nashville_etl_service_backup_spark.operators.dedup import (
         connected_components,
@@ -207,14 +246,22 @@ def test_release_persisted_frees_signature_caches(spark):
     query forever."""
     from nashville_etl_service_backup_spark.operators import release_persisted
     from nashville_etl_service_backup_spark.queries.llmdata import (
+        dedup_clusters,
         dedup_embedding_pairs,
         dedup_lsh_pairs,
         dedup_ngram_jaccard,
+        llm_corpus_curation,
     )
 
     release_persisted()  # drop anything earlier tests left behind
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    for fn in (dedup_lsh_pairs, dedup_ngram_jaccard, dedup_embedding_pairs):
+    for fn in (
+        dedup_lsh_pairs,
+        dedup_ngram_jaccard,
+        dedup_embedding_pairs,
+        dedup_clusters,
+        llm_corpus_curation,
+    ):
         fn(spark, "/root/testdata/sf0.001").count()
     during = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
     assert len(during - before) >= 3  # each query cached its signatures
