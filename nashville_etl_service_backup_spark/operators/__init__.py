@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame
 
 
 # Frames materialized inside operators: persisted signature stages and
-# the eager local checkpoints at the dedup barriers. Queries are lazy,
+# the local checkpoints at the dedup barriers. Queries are lazy,
 # so the operator cannot free them before its caller materializes the
 # result; instead each one registers its release here and the caller
 # (bench loop, long-running service, tests) calls release_persisted()
@@ -38,20 +38,20 @@ def free_checkpoint(cp: DataFrame) -> None:
 
 
 def register_checkpoint(cp: DataFrame) -> DataFrame:
-    """Register an existing localCheckpoint() for release_persisted()."""
+    """Register a localCheckpoint() for release_persisted().
+
+    A checkpoint is a materialization barrier that also cuts the
+    lineage: every later plan starts from a leaf instead of
+    re-analyzing and re-planning all of the upstream plan, as a
+    persist()ed frame makes each consumer do. Under AQE the leaf
+    reports no output partitioning.
+
+    Unlike a persist()ed frame, blocks lost with an executor are not
+    recomputed from lineage: a query reading them fails and must be
+    re-run. Use it only for barriers whose query can be re-run."""
     rdd = _checkpoint_rdd(cp)
     _PERSISTED.append(lambda: rdd.unpersist(False))
     return cp
-
-
-def track_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint() + register for release_persisted().
-
-    A materialization barrier that also cuts the lineage: every later
-    plan starts from a leaf instead of re-analyzing and re-planning all
-    of ``df``'s upstream plan, as a persist()ed frame makes each
-    consumer do. Under AQE the leaf reports no output partitioning."""
-    return register_checkpoint(df.localCheckpoint())
 
 
 def release_persisted() -> int:

@@ -192,13 +192,18 @@ def lsh_near_dup_pairs(
     # sides of the verify join): checkpoint it so the signature pipeline
     # runs once, not 4×, and so no later plan carries the upstream
     # lineage. At 100 TB this is the standard "materialize signatures"
-    # stage of an LSH dedup (disk-backed, partitioned). Registered for
-    # release_persisted() — the caller frees it after consuming the
-    # (lazy) result.
-    from nashville_etl_service_backup_spark.operators import track_checkpoint
+    # stage of an LSH dedup (disk-backed, partitioned). The checkpoint is
+    # lazy: the first job that reads the pairs materializes it, so in
+    # dedup_recall_audit the signatures are built in the query's own job
+    # beside the exact finder's scan (an eager one ran before it, +7% at
+    # sf0.1). Registered for release_persisted() — the caller frees it
+    # after consuming the (lazy) result.
+    from nashville_etl_service_backup_spark.operators import register_checkpoint
 
-    base = track_checkpoint(
-        _signature_frame(df, id_col, text_col, shingle_n, num_hashes, bands)
+    base = register_checkpoint(
+        _signature_frame(
+            df, id_col, text_col, shingle_n, num_hashes, bands
+        ).localCheckpoint(eager=False)
     )
     # candidate generation: explode bands, equi-join on (band_idx, hash)
     b = base.select(
@@ -508,13 +513,15 @@ def connected_components(
     the convergence test (a scalar aggregate per round) — no row data
     ever reaches the driver.
 
-    Barriers: the symmetric edge list is compacted by a hash
-    repartition on src and materialized as an eager ``localCheckpoint``
-    (on a real cluster, checkpoint to durable storage instead), so each
-    round's plan starts from a lineage-free leaf instead of re-planning
-    the pair producer (LSH, the funnel) once per round. Under AQE a
-    checkpoint reports UnknownPartitioning, so each round still
-    shuffles the edges for its join. The labels start with round 1
+    Barriers: the symmetric edge list is materialized as an eager
+    ``localCheckpoint`` (on a real cluster, checkpoint to durable
+    storage instead), so each round's plan starts from a lineage-free
+    leaf instead of re-planning the pair producer (LSH, the funnel)
+    once per round. Under AQE a checkpoint reports UnknownPartitioning,
+    so each round shuffles the edges for its join whatever their
+    layout. A hash repartition on src before the checkpoint only adds
+    a job and a shuffle: without it, graftbench corpus_curation ran no
+    slower (6 alternating pairs, 4 vCPUs). The labels start with round 1
     already applied, least(src, min(dst)) per src, which reaches the
     same fixed point one round sooner than lbl = node. Each round's
     labels are a lazy checkpoint, materialized by the round's
@@ -532,7 +539,6 @@ def connected_components(
         e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        .repartition("src")
         .localCheckpoint()
     )
     # lazy checkpoints (pagerank's device, round 10): the convergence

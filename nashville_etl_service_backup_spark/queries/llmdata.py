@@ -1102,12 +1102,13 @@ def llm_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Every stage is a previously-verified operator; this query pins
     their COMPOSITION (the funnel's survivors feed the dedup, the
-    keep-set feeds the split). Its materialization barriers are eager
-    local checkpoints: the kept set here, the LSH signatures and the
-    connected-components edge list inside the operators. Each later
-    plan starts from a checkpoint leaf instead of re-planning the
-    funnel and LSH lineage."""
-    from nashville_etl_service_backup_spark.operators import track_checkpoint
+    keep-set feeds the split). Its materialization barriers are local
+    checkpoints: the kept set here and, inside the operators, the LSH
+    signatures (lazy, built by the first job that reads the pairs) and
+    the connected-components edge list. Each later plan starts from a
+    checkpoint leaf instead of re-planning the funnel and LSH
+    lineage."""
+    from nashville_etl_service_backup_spark.operators import register_checkpoint
 
     docs = spread(load(spark, sf_dir, "documents"))
     _, survivors = _funnel_split(docs, keep_cols=("doc_id", "lang"))
@@ -1116,10 +1117,10 @@ def llm_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint it once, or the funnel's Arrow UDF re-runs per consumer.
     # This is the materialization barrier a real pipeline puts between
     # "curated corpus" and everything derived from it.
-    kept = track_checkpoint(
-        survivors.filter(F.col("late_verdict") == "kept").select(
-            "doc_id", "lang", "text"
-        )
+    kept = register_checkpoint(
+        survivors.filter(F.col("late_verdict") == "kept")
+        .select("doc_id", "lang", "text")
+        .localCheckpoint()
     )
     pairs = lsh_near_dup_pairs(
         kept, "doc_id", "text", shingle_n=2, num_hashes=4, bands=2, threshold=0.6
@@ -3919,9 +3920,8 @@ def dedup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     set semantics (measured +1 s at sf0.1), and the round-3
     semi-join + three-persisted-count-branch formulation re-derived
     finders under concurrent branch materialization — the round-4
-    bench drift. The LSH finder's signature frame is an eager
-    checkpoint, built when the query is; the exact finder's subtree
-    runs in the query's own job."""
+    bench drift. Both finders' subtrees are independent leaves of one
+    job, so they scan concurrently."""
     from nashville_etl_service_backup_spark.operators.dedup import (
         lsh_near_dup_pairs,
         prefix_filter_jaccard_pairs,

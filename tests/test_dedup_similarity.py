@@ -203,9 +203,8 @@ def test_connected_components_matches_union_find(spark):
         sc.setLocalProperty("spark.job.description", None)
     assert got == want
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    # 36 jobs; the earlier lbl = node seed over persisted edges, with a
-    # second label join per round, launched 39
-    assert len(jobs) <= 36, jobs
+    # folded first round + one-aggregate rounds
+    assert len(jobs) <= 35, jobs
 
 
 def test_connected_components_empty_pairs(spark):

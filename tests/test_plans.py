@@ -11,6 +11,8 @@ at 100 TB, pinned so they cannot regress.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from nashville_etl_service_backup_spark.queries import extended_queries
@@ -471,8 +473,12 @@ def test_recall_audit_single_consumption_union_hashagg(spark):
     assert "Union" in plan
     # each finder is derived once — the old three-count-branch
     # formulation re-entered each finder subtree from multiple parents.
-    # One documents scan is the exact finder's; the LSH finder's scan
-    # sits behind its signature checkpoint, materialized once when the
-    # query is built and read back through Scan ExistingRDD leaves
+    # One documents scan is the exact finder's; the LSH finder reads
+    # its one signature checkpoint through exactly four leaves (both
+    # sides of the band self-join, both sides of the verify join)
     assert plan.count("Location: InMemoryFileIndex") == 1
-    assert "Scan ExistingRDD" in plan
+    leaves = re.findall(
+        r"^Arguments: .*?(\w+RDD\[\d+\]).*, ExistingRDD,", plan, re.M
+    )
+    assert len(leaves) == 4, leaves
+    assert len(set(leaves)) == 1, leaves
