@@ -90,13 +90,15 @@ def spread(df: DataFrame, factor: int = 2) -> DataFrame:
     ran the whole funnel (2 jobs, about 2.2 s at 2000 docs).
 
     Catalyst pushes deterministic Filters below the round-robin
-    Exchange added here, so filters written after spread() (including
-    ones that call a Python UDF) still run in the scan's tasks. On
-    llm_corpus_curation the pre-filter, the Arrow repetition UDF and
-    the late-verdict filter all ran in the scan's single task (1.78 s);
-    a CollectMetrics barrier that kept them above the Exchange spread
-    them over 8 tasks but gained only about 10%, because each task pays
-    its own Python worker cost."""
+    Exchange added here, so filters written straight after spread()
+    still run in the scan's tasks: the curation funnel's filters ran in
+    the scan's single task. A CollectMetrics node (``observe``) between
+    the two keeps them above it, because no Filter is pushed through
+    one; the funnel in queries/llmdata.py does that. Spreading pays
+    only for JVM expressions: every Python-UDF task pays about
+    0.2-0.3 s before its first row (PySpark's worker re-reads
+    pyspark.zip's directory per task in setup_spark_files), so more
+    tasks of a Python stage cost more, not less."""
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df

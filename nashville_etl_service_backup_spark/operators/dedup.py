@@ -21,7 +21,7 @@ signature), and uniform enough for banding.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -510,8 +510,8 @@ def connected_components(
     Label propagation converges in O(cluster diameter) iterations;
     near-dup clusters are shallow (dozens of docs), so 3-5 iterations
     in practice. Driver participates only in
-    the convergence test (a scalar aggregate per round) — no row data
-    ever reaches the driver.
+    the convergence test (a scalar sum per round, observed on the
+    round's own job) — no row data ever reaches the driver.
 
     Barriers: the symmetric edge list is materialized as an eager
     ``localCheckpoint`` (on a real cluster, checkpoint to durable
@@ -524,10 +524,11 @@ def connected_components(
     slower (6 alternating pairs, 4 vCPUs). The labels start with round 1
     already applied, least(src, min(dst)) per src, which reaches the
     same fixed point one round sooner than lbl = node. Each round's
-    labels are a lazy checkpoint, materialized by the round's
-    convergence sum; the superseded round's labels are freed once the
-    next round's sum has run, the edges when the loop ends, and the
-    final labels are registered for release_persisted().
+    labels are an eager checkpoint whose job also yields the round's
+    convergence sum, sum(lbl), through an Observation, so no separate
+    aggregate job runs; the superseded round's labels are freed once
+    the next round is checkpointed, the edges when the loop ends, and
+    the final labels are registered for release_persisted().
     """
     from nashville_etl_service_backup_spark.operators import (
         free_checkpoint,
@@ -541,20 +542,20 @@ def connected_components(
         )
         .localCheckpoint()
     )
-    # lazy checkpoints (pagerank's device, round 10): the convergence
-    # probe's collect materializes the checkpoint's last stage as a side
-    # effect, instead of an eager checkpoint job plus a separate sum.
-    # Under AQE the localCheckpoint call itself still runs every
-    # upstream shuffle stage (the plan is finalized to build the RDD).
-    labels = (
+
+    def checkpoint_with_sum(lbls: DataFrame):
+        # labels are monotonically non-increasing, so sum(lbl) strictly
+        # decreases until the fixed point — a one-number convergence
+        # probe, read off the checkpoint's own job (NULL on no rows)
+        obs = Observation()
+        cp = lbls.observe(obs, F.sum("lbl").alias("s")).localCheckpoint()
+        return cp, obs.get["s"]
+
+    labels, prev_sum = checkpoint_with_sum(
         edges.groupBy("src")
         .agg(F.least(F.col("src"), F.min("dst")).alias("lbl"))
         .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=False)
     )
-    # labels are monotonically non-increasing, so sum(lbl) strictly
-    # decreases until the fixed point — a one-number convergence probe.
-    prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
     converged = False
     for _ in range(max_iter):
         # NOTE (round 10): SHUFFLE_HASH hints on the label-sized sides
@@ -568,15 +569,13 @@ def connected_components(
         # unioned with its neighbours'): a second join back to the labels
         # would cost two more shuffles per round, because the checkpoints
         # carry no partitioning under AQE
-        nxt = (
+        nxt, cur_sum = checkpoint_with_sum(
             edges.join(labels, edges["src"] == labels["node"])
             .select(F.col("dst").alias("node"), "lbl")
             .unionByName(labels)
             .groupBy("node")
             .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=False)
         )
-        cur_sum = nxt.agg(F.sum("lbl")).collect()[0][0]
         free_checkpoint(labels)
         labels = nxt
         if cur_sum == prev_sum:

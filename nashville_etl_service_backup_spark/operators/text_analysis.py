@@ -1,16 +1,27 @@
 """Text analysis operators for training-data pipelines: language ID,
-quality scoring, token counting, document fingerprinting.
+quality scoring, repetition signals, token counting, document
+fingerprinting.
 
-All pure built-in expressions (JVM-side); the heuristics are deliberately
-simple-but-deterministic so the DuckDB oracle can compute the identical
-values.
+Per-document features are built-in expressions (JVM-side), a narrow map
+that runs in every task of a spread() input; the heuristics are
+deliberately simple-but-deterministic so the DuckDB oracle can compute
+the identical values. No per-document feature is a Python UDF: on
+PySpark 4.1 (4-vCPU VM, local[4], reused workers) every Python-UDF task
+pays about 0.2-0.3 s before its first row, because
+pyspark/worker_util.py's setup_spark_files calls
+importlib.invalidate_caches(), which re-reads pyspark.zip's directory
+for each of its zipimporters on every task. At corpus-curation sizes
+that floor cost more than the features, and it grows with the task
+count, so it also defeated parallelism. The trade turns on document
+length: on documents of about 3000 characters the deleted Arrow
+repetition UDF was about 15% cheaper than these interpreted
+higher-order functions (ROADMAP D5).
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -52,10 +63,13 @@ def stopword_count(tokens: Column, stopwords: list[str] | None = None) -> Column
     return F.size(F.filter(tokens, lambda t: t.isin(*sw))).cast("long")
 
 
-def quality_features(text: Column) -> dict[str, Column]:
+def quality_features(
+    text: Column, tokens: Column | None = None
+) -> dict[str, Column]:
     """Deterministic quality features + composite score ∈ [0,1]:
-    0.5·uniq_ratio + 0.3·(1−stop_ratio) + 0.2·min(n_tokens/300, 1)."""
-    toks = tokenize(text)
+    0.5·uniq_ratio + 0.3·(1−stop_ratio) + 0.2·min(n_tokens/300, 1).
+    ``tokens`` is ``tokenize(text)`` when the caller already holds it."""
+    toks = tokenize(text) if tokens is None else tokens
     n_tokens = F.size(toks).cast("long")
     n_unique = F.size(F.array_distinct(toks)).cast("long")
     nt_d = n_tokens.cast("double")
@@ -82,7 +96,8 @@ def quality_features(text: Column) -> dict[str, Column]:
 
 def language_id(text: Column) -> Column:
     """Stopword-hit language ID: language with the most distinct stopword
-    hits; ties resolved by list order; zero hits → 'und'."""
+    hits; ties resolved by list order; zero hits → 'und' (see
+    :func:`has_stopword`)."""
     toks = search_tokens(text)
     hits = {
         lang: F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in sw])))
@@ -95,6 +110,13 @@ def language_id(text: Column) -> Column:
             pred
         )
     return pred
+
+
+def has_stopword(tokens: Column) -> Column:
+    """True when any language's stopword occurs in ``tokens``, i.e.
+    exactly when :func:`language_id` is not 'und'."""
+    words = sorted({w for _, sw in LANG_STOPWORDS for w in sw})
+    return F.arrays_overlap(tokens, F.array(*[F.lit(w) for w in words]))
 
 
 def content_fingerprint(text: Column) -> Column:
@@ -138,87 +160,50 @@ def pii_counts(text: Column) -> dict[str, Column]:
     }
 
 
-def _repetition_counts_udf():
-    """Arrow-batched integer repetition counts per document. ONLY exact
-    integers cross the Python boundary (line/gram/char counts, bigram
-    mode) — every division and rounding stays in Spark expressions, so
-    there is no float-parity surface between this path, the HOF path,
-    and the SQL oracle. ~5× faster than the interpreted HOF fold on the
-    bigram mode."""
-    import re as _re
-    from collections import Counter
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` computed once per row: a one-element
+    transform binds it to the lambda variable. An outer expression
+    referenced inside a lambda is re-evaluated at every reference, and
+    higher-order function bodies get no common-subexpression
+    elimination, so a sorted array read by element_at in a lambda would
+    be re-sorted per element."""
+    return F.element_at(F.transform(F.array(value), body), 1)
 
-    schema = (
-        "n_lines long, n_distinct_lines long, n_grams long, "
-        "mode_grams long, total_chars long, max_line_chars long"
+
+def _frac(num: Column, den: Column) -> Column:
+    return F.when(den > 0, num.cast("double") / den.cast("double")).otherwise(
+        F.lit(0.0)
     )
 
-    @F.pandas_udf(schema)
-    def _counts(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            t = t or ""
-            # parity notes: F.trim strips 0x20 only → strip(' ');
-            # normalize_text = lower → [^a-z0-9]+→' ' → trim
-            lines = [ln.strip(" ") for ln in t.split("\n")]
-            lines = [ln for ln in lines if ln]
-            norm = _re.sub(r"[^a-z0-9]+", " ", t.lower()).strip(" ")
-            toks = norm.split(" ") if norm else []
-            grams = (
-                [toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)]
-                if len(toks) >= 2
-                else []
-            )
-            rows.append(
-                {
-                    "n_lines": len(lines),
-                    "n_distinct_lines": len(set(lines)),
-                    "n_grams": len(grams),
-                    "mode_grams": max(Counter(grams).values()) if grams else 0,
-                    "total_chars": sum(len(ln) for ln in lines),
-                    "max_line_chars": max((len(ln) for ln in lines), default=0),
-                }
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "n_lines", "n_distinct_lines", "n_grams",
-                "mode_grams", "total_chars", "max_line_chars",
-            ],
+
+def _longest_run(g: Column) -> Column:
+    """Length of the longest run of equal values in the sorted array
+    ``g`` (0 when empty): the indices where a new value starts, plus the
+    size as a sentinel, and the widest gap between neighbours. ``g``
+    must be cheap to reference (a column or a lambda variable). ``get``
+    is 0-based and NULL out of bounds, so index 0 never reaches
+    element_at(arr, 0), which raises under ANSI."""
+    starts = F.filter(
+        F.transform(
+            g,
+            lambda x, i: F.when(F.coalesce(x != F.get(g, i - 1), F.lit(True)), i),
+        ),
+        lambda i: i.isNotNull(),
+    )
+
+    def widest_gap(bounds: Column) -> Column:
+        m = F.size(bounds) - 1
+        gaps = F.zip_with(
+            F.slice(bounds, 2, m), F.slice(bounds, 1, m), lambda b, a: b - a
         )
+        return F.coalesce(F.array_max(gaps), F.lit(0))
 
-    return _counts
-
-
-def repetition_features(text: Column) -> dict[str, Column]:
-    """Gopher-style repetition signals — vectorized path: integer counts
-    from one Arrow-batched pandas UDF (see _repetition_counts_udf), the
-    fraction/rounding math in Spark expressions. Semantically identical
-    to :func:`repetition_features_hof` (equality pinned in tests)."""
-    c = _repetition_counts_udf()(text)
-    n_lines = c["n_lines"]
-    n_grams = c["n_grams"]
-    total_chars = c["total_chars"]
-    dup_line_frac = F.when(
-        n_lines > 0,
-        F.lit(1.0)
-        - c["n_distinct_lines"].cast("double") / n_lines.cast("double"),
-    ).otherwise(F.lit(0.0))
-    top_bigram_frac = F.when(
-        n_grams > 0, c["mode_grams"].cast("double") / n_grams.cast("double")
-    ).otherwise(F.lit(0.0))
-    max_line_frac = F.when(
-        total_chars > 0,
-        c["max_line_chars"].cast("double") / total_chars.cast("double"),
-    ).otherwise(F.lit(0.0))
-    return {
-        "dup_line_frac": F.round(dup_line_frac, 6),
-        "top_bigram_frac": F.round(top_bigram_frac, 6),
-        "max_line_frac": F.round(max_line_frac, 6),
-    }
+    return _let(F.concat(starts, F.array(F.size(g))), widest_gap)
 
 
-def repetition_features_hof(text: Column) -> dict[str, Column]:
+def repetition_features(
+    text: Column, tokens: Column | None = None
+) -> dict[str, Column]:
     """Gopher-style repetition signals (Rae et al. 2021, §A1.1 "repetition
     filters", public heuristic set), all exact and engine-portable:
 
@@ -229,69 +214,51 @@ def repetition_features_hof(text: Column) -> dict[str, Column]:
     - max_line_frac:  chars in the longest line / total chars — wall-of-
       text or single-line-dump detector.
 
-    Pure higher-order functions (sort + fold for the bigram mode — no
-    explode, no shuffle): a narrow per-document map at any scale."""
+    Built-in expressions only, a narrow per-document map: each feature
+    binds its array (the lines, the sorted bigrams) once with
+    :func:`_let`, and the bigram mode is the longest run in the sorted
+    bigram array. ``tokens`` is ``tokenize(text)`` when the caller
+    already holds it as a column. A NULL text scores 0.0 throughout."""
     lines = F.filter(
-        F.transform(F.split(text, "\n"), lambda ln: F.trim(ln)),
+        F.transform(F.split(F.coalesce(text, F.lit("")), "\n"), lambda ln: F.trim(ln)),
         lambda ln: F.length(ln) > 0,
     )
-    n_lines = F.size(lines)
-    dup_line_frac = F.when(
-        n_lines > 0,
-        F.lit(1.0)
-        - F.size(F.array_distinct(lines)).cast("double") / n_lines.cast("double"),
-    ).otherwise(F.lit(0.0))
+    toks = tokenize(text) if tokens is None else tokens
 
-    toks = tokenize(text)
-    grams = F.when(F.size(toks) >= 2, _sorted_bigrams(toks)).otherwise(
-        F.array().cast("array<string>")
-    )
-    n_grams = F.size(grams)
-    # mode count of a SORTED array via one fold: track (prev, run, best)
-    best_run = F.aggregate(
-        grams,
-        F.struct(
-            F.lit("").alias("prev"),
-            F.lit(0).alias("run"),
-            F.lit(0).alias("best"),
-        ),
-        lambda acc, g: F.struct(
-            g.alias("prev"),
-            F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                acc["best"],
-                F.when(g == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda acc: acc["best"],
-    )
-    top_bigram_frac = F.when(
-        n_grams > 0, best_run.cast("double") / n_grams.cast("double")
-    ).otherwise(F.lit(0.0))
+    def sorted_bigrams(tk: Column) -> Column:
+        # shifted slices give the neighbour pairs without indexing; tokens
+        # are never NULL, so plain concat suffices. sort_array, not
+        # array_sort: array_sort evaluates its default comparator as an
+        # interpreted lambda per comparison
+        m = F.greatest(F.size(tk) - 1, F.lit(0))
+        return F.sort_array(
+            F.zip_with(
+                F.slice(tk, 1, m), F.slice(tk, 2, m), lambda a, b: F.concat(a, F.lit(" "), b)
+            )
+        )
 
-    total_chars = F.aggregate(
-        lines, F.lit(0), lambda acc, ln: acc + F.length(ln)
+    def dup_line(ls: Column) -> Column:
+        n = F.size(ls)
+        return F.when(
+            n > 0, F.lit(1.0) - F.size(F.array_distinct(ls)).cast("double") / n
+        ).otherwise(F.lit(0.0))
+
+    def max_line(ls: Column) -> Column:
+        total = F.aggregate(ls, F.lit(0), lambda acc, ln: acc + F.length(ln))
+        longest = F.aggregate(
+            ls, F.lit(0), lambda acc, ln: F.greatest(acc, F.length(ln))
+        )
+        return _frac(longest, total)
+
+    top_bigram = _let(
+        _let(toks, sorted_bigrams),
+        lambda g: _frac(_longest_run(g), F.size(g)),
     )
-    max_line = F.aggregate(
-        lines, F.lit(0), lambda acc, ln: F.greatest(acc, F.length(ln))
-    )
-    max_line_frac = F.when(
-        total_chars > 0, max_line.cast("double") / total_chars.cast("double")
-    ).otherwise(F.lit(0.0))
     return {
-        "dup_line_frac": F.round(dup_line_frac, 6),
-        "top_bigram_frac": F.round(top_bigram_frac, 6),
-        "max_line_frac": F.round(max_line_frac, 6),
+        "dup_line_frac": F.round(_let(lines, dup_line), 6),
+        "top_bigram_frac": F.round(top_bigram, 6),
+        "max_line_frac": F.round(_let(lines, max_line), 6),
     }
-
-
-def _sorted_bigrams(toks: Column) -> Column:
-    # zip of shifted slices, not F.get(toks, i+1) — the per-element get
-    # re-evaluates the token EXPRESSION per bigram (see dedup.shingles)
-    m = F.greatest(F.size(toks) - 1, F.lit(0))
-    z = F.arrays_zip(F.slice(toks, 1, m), F.slice(toks, 2, m))
-    grams = F.transform(z, lambda s: F.concat_ws(" ", s["0"], s["1"]))
-    return F.array_sort(grams)
 
 
 def bag_fingerprint(text: Column) -> Column:

@@ -7,7 +7,10 @@ hyperplanes as float literals; the IVF oracle unrolls the k-means fit).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import functools
+
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nashville_etl_service_backup_spark.functions.text import tokenize
@@ -42,6 +45,7 @@ from nashville_etl_service_backup_spark.operators.text_analysis import (
     bm25_topk,
     bpe_token_count,
     content_fingerprint,
+    has_stopword,
     PII_PATTERNS,
     chunk_token_windows,
     contamination_matches,
@@ -851,7 +855,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals per document (duplicate-line
     fraction, top-bigram fraction, longest-line char fraction)."""
-    # spread: the bigram-mode fold is the CPU cost; parallelize it
+    # spread: the sorted-bigram mode is the CPU cost; parallelize it
     docs = spread(load(spark, sf_dir, "documents"))
     feats = repetition_features(F.col("text"))
     return docs.select("doc_id", *[c.alias(k) for k, c in feats.items()])
@@ -886,53 +890,61 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _funnel_split(docs: DataFrame, keep_cols: tuple[str, ...] = ()):
-    """Short-circuited funnel halves (round-2 verdict item #4): the
-    length and PII rules are pure-JVM scalar expressions, so they run
-    first as a narrow pre-filter; the Arrow-batched repetition UDF (the
-    expensive rule) is evaluated ONLY for documents that survived them —
-    a `when` cascade alone would not stop ArrowEvalPython from running
-    on every row.
+    """The corpus-filter funnel as one JVM-only narrow map, split into
+    its two halves. Each document is tokenized once, below a
+    CollectMetrics node (``observe``; its count is never read): Catalyst
+    pushes no Filter through one, so the funnel runs above spread()'s
+    round-robin Exchange, in every task, instead of in the scan's.
+    Every rule reads the one token array: n_tokens, the stopword and
+    unique-token ratios, the language hits and the bigrams.
 
-    Returns (early, survivors): `early` carries the pre-filter verdict
-    (too_short | contains_pii), `survivors` carries `late_verdict`
-    (repetitive | no_language | low_quality | kept). Both keep
-    ``keep_cols`` alongside the verdict for downstream stages."""
-    qf = quality_features(F.col("text"))
-    pii = pii_counts(F.col("text"))
+    Returns (early, survivors): `early` carries the cheap pre-filter
+    verdict (too_short | contains_pii), `survivors` carries
+    `late_verdict` (repetitive | no_language | low_quality | kept) for
+    the documents that passed it. Both keep ``keep_cols`` alongside the
+    verdict for downstream stages."""
+    tokens, pre, late = _funnel_exprs(SparkContext._gateway)
+    # observe() stops filter pushdown below this point
+    staged = docs.select(*keep_cols, "text", tokens.alias("_tk")).observe(
+        "funnel_docs", F.count(F.lit(1))
+    )
+    early = staged.filter(pre.isNotNull()).select(*keep_cols, pre.alias("verdict"))
+    survivors = staged.filter(pre.isNull()).select(
+        *keep_cols, "text", late.alias("late_verdict")
+    )
+    return early, survivors
+
+
+@functools.lru_cache(maxsize=4)
+def _funnel_exprs(gateway) -> tuple[Column, Column, Column]:
+    """The funnel's token array and its pre-filter and late verdicts.
+    They name only ``text`` and the staged ``_tk``, so they fit any
+    documents frame; keyed on the py4j gateway, so no cached Column
+    outlives the JVM that holds it (plans.canonicalize's device)."""
+    text, tk = F.col("text"), F.col("_tk")
     pii_total = None
-    for c in pii.values():
+    for c in pii_counts(text).values():
         pii_total = c if pii_total is None else pii_total + c
-    pre = F.when(qf["n_tokens"] < 20, "too_short").when(
-        pii_total > 0, "contains_pii"
-    )
-    staged = docs.select(*keep_cols, F.col("text"), pre.alias("pre_verdict"))
-    early = staged.filter(F.col("pre_verdict").isNotNull()).select(
-        *keep_cols, F.col("pre_verdict").alias("verdict")
-    )
-    survivors = staged.filter(F.col("pre_verdict").isNull())
-    rep = repetition_features(F.col("text"))
-    qf2 = quality_features(F.col("text"))
+    pre = F.when(F.size(tk) < 20, "too_short").when(pii_total > 0, "contains_pii")
+    rep = repetition_features(text, tokens=tk)
     late = (
         F.when(
             (rep["dup_line_frac"] > 0.3) | (rep["top_bigram_frac"] > 0.2),
             "repetitive",
         )
-        .when(language_id(F.col("text")) == "und", "no_language")
-        .when(qf2["quality"] < 0.55, "low_quality")
+        .when(~has_stopword(tk), "no_language")
+        .when(quality_features(text, tokens=tk)["quality"] < 0.55, "low_quality")
         .otherwise("kept")
     )
-    survivors = survivors.select(
-        *keep_cols, F.col("text"), late.alias("late_verdict")
-    )
-    return early, survivors
+    return tokenize(text), pre, late
 
 
 def text_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-filter funnel (C4/Gopher-style): every document gets
     its FIRST failing rule — length → PII → repetition → language →
     quality — and the funnel is tallied per verdict. See
-    :func:`_funnel_split` for the UDF short-circuit; both branches
-    aggregate map-side before the tiny union."""
+    :func:`_funnel_split` for the two halves; both branches aggregate
+    map-side before the tiny union."""
     # spread: every funnel rule is per-row scalar CPU
     docs = spread(load(spark, sf_dir, "documents"))
     early, survivors = _funnel_split(docs)
@@ -1091,8 +1103,8 @@ def llm_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     query — the shape a real pretraining-data job runs end to end:
 
       1. quality funnel (length → PII → repetition → language →
-         quality), keeping only verdict='kept' docs — the Arrow
-         repetition UDF runs only on pre-filter survivors;
+         quality), keeping only verdict='kept' docs — one JVM pass
+         over the spread documents, each tokenized once;
       2. MinHash-LSH near-dup pairs AMONG THE KEPT DOCS (banded
          equi-join candidates, exact-Jaccard verify);
       3. cluster resolution (connected components) + representative
@@ -1114,7 +1126,7 @@ def llm_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, survivors = _funnel_split(docs, keep_cols=("doc_id", "lang"))
     # three downstream stages consume the kept set (LSH signatures, the
     # resolve anti-join's left side, the split/token aggregate) —
-    # checkpoint it once, or the funnel's Arrow UDF re-runs per consumer.
+    # checkpoint it once, or the funnel re-runs per consumer.
     # This is the materialization barrier a real pipeline puts between
     # "curated corpus" and everything derived from it.
     kept = register_checkpoint(

@@ -203,8 +203,9 @@ def test_connected_components_matches_union_find(spark):
         sc.setLocalProperty("spark.job.description", None)
     assert got == want
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    # folded first round + one-aggregate rounds
-    assert len(jobs) <= 35, jobs
+    # folded first round + one-aggregate rounds, each round's
+    # convergence sum observed on its checkpoint job
+    assert len(jobs) <= 29, jobs
 
 
 def test_connected_components_empty_pairs(spark):

@@ -291,29 +291,77 @@ def test_contamination_matches_planted(spark):
     assert hits[1] == 1  # 'quick brown fox jumps'
 
 
-def test_repetition_vectorized_equals_hof(spark):
-    """The pandas-UDF counts path and the pure-HOF path must agree on
-    every document (only exact integers cross the Python boundary)."""
+def _repetition_reference(t):
+    """Pure-Python repetition signals: exact integer counts, then the
+    fractions rounded half-up to 6 places as Spark rounds a double."""
+    import re
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    t = t or ""
+    # F.trim strips 0x20 only; normalize_text = lower, [^a-z0-9]+ -> ' ',
+    # trim
+    lines = [ln.strip(" ") for ln in t.split("\n")]
+    lines = [ln for ln in lines if ln]
+    norm = re.sub(r"[^a-z0-9]+", " ", t.lower()).strip(" ")
+    toks = norm.split(" ") if norm else []
+    grams = [toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)]
+    total_chars = sum(len(ln) for ln in lines)
+
+    def r6(x):
+        q = Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
+        return float(q)
+
+    return {
+        "dup_line_frac": r6(1.0 - len(set(lines)) / len(lines)) if lines else 0.0,
+        "top_bigram_frac": (
+            r6(max(Counter(grams).values()) / len(grams)) if grams else 0.0
+        ),
+        "max_line_frac": (
+            r6(max(len(ln) for ln in lines) / total_chars) if total_chars else 0.0
+        ),
+    }
+
+
+def test_repetition_features_match_python_reference(spark):
+    """The built-in-expression repetition signals equal a pure-Python
+    count on every sf0.001 document and on edge cases. The two-token
+    case has one bigram, where a 1-based lookup of the previous element
+    would hit element_at(arr, 0), which raises under ANSI."""
     from pyspark.sql import functions as F
 
     from nashville_etl_service_backup_spark.operators.text_analysis import (
         repetition_features,
-        repetition_features_hof,
     )
     from nashville_etl_service_backup_spark.tables import load
 
+    edge = [
+        None,
+        "",
+        "   \n \n\n  ",
+        "hello",
+        "hello world",
+        "a\tb\r\nc  d\r\n\ta\tb",
+        "x y\nx y\n  x y  \nz",
+        "a b a b a b c",
+        "b a\nb a\nb a",
+    ]
+    edge_df = spark.createDataFrame(
+        [(-1 - i, t) for i, t in enumerate(edge)], "doc_id long, text string"
+    )
     docs = load(spark, "/root/testdata/sf0.001", "documents")
-    v = repetition_features(F.col("text"))
-    h = repetition_features_hof(F.col("text"))
-    out = docs.select(
-        "doc_id",
-        *[c.alias(f"v_{k}") for k, c in v.items()],
-        *[c.alias(f"h_{k}") for k, c in h.items()],
-    ).collect()
-    assert out
+    feats = repetition_features(F.col("text"))
+    out = (
+        docs.select("doc_id", "text")
+        .unionByName(edge_df)
+        .select("doc_id", "text", *[c.alias(k) for k, c in feats.items()])
+        .collect()
+    )
+    assert len(out) > len(edge)
     for r in out:
-        for k in ("dup_line_frac", "top_bigram_frac", "max_line_frac"):
-            assert r[f"v_{k}"] == r[f"h_{k}"], (r["doc_id"], k)
+        want = _repetition_reference(r["text"])
+        got = {k: r[k] for k in want}
+        assert got == want, (r["doc_id"], r["text"], got, want)
 
 
 def test_corpus_lm_scores_hand_computed(spark):

@@ -251,14 +251,72 @@ def test_boilerplate_strip_is_anti_join(spark):
     assert "LeftAnti" in plan
 
 
-def test_filter_funnel_udf_only_on_survivors(spark):
-    # the short-circuit: exactly one Arrow stage, fed by the pre-filter
-    # branch (isnull(pre_verdict)), unioned with the UDF-free early
-    # branch
-    plan = plan_of(spark, "text_filter_funnel")
-    # one Arrow stage (tree line + detail line in formatted output)
-    assert plan.count("ArrowEvalPython (") == 1
-    assert "Union" in plan
+def _filters_above_round_robin(plan: str) -> tuple[int, int]:
+    """(Filters with a round-robin Exchange below them, Filters below
+    one) in an explain tree."""
+    # tree lines only: a condition's string literals can break lines
+    lines = [ln for ln in plan.splitlines() if re.match(r"[ :]*[+:]- \S", ln)]
+
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    above = below = 0
+    for i, ln in enumerate(lines):
+        if not re.match(r"[ :]*[+:]- Filter\b", ln):
+            continue
+        sub = []
+        for nxt in lines[i + 1 :]:
+            if depth(nxt) <= depth(ln):
+                break
+            sub.append(nxt)
+        if any("RoundRobinPartitioning" in x for x in sub):
+            above += 1
+    for i, ln in enumerate(lines):
+        if "Exchange RoundRobinPartitioning" not in ln:
+            continue
+        for nxt in lines[i + 1 :]:
+            if depth(nxt) <= depth(ln):
+                break
+            below += bool(re.match(r"[ :]*[+:]- Filter\b", nxt))
+    return above, below
+
+
+@pytest.mark.parametrize(
+    "name", ["text_filter_funnel", "llm_tokenize_pack", "text_repetition"]
+)
+def test_curation_funnel_runs_in_jvm(spark, name):
+    """The funnel and the repetition signals are built-in expressions: no
+    Python evaluation stage in the plan. (llm_corpus_curation's funnel
+    sits behind its kept-set checkpoint; the placement test below
+    checks its kept frame.)"""
+    plan = plan_of(spark, name)
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
+
+
+def test_funnel_filters_stay_above_spread(spark):
+    """The funnel's Filters sit above spread()'s round-robin Exchange (a
+    CollectMetrics node stops Catalyst from pushing them into the
+    scan's single task), and text_filter_funnel keeps its two halves
+    as a Union."""
+    from nashville_etl_service_backup_spark.operators import spread
+    from nashville_etl_service_backup_spark.queries.llmdata import _funnel_split
+    from nashville_etl_service_backup_spark.tables import load
+
+    def simple(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    docs = spread(load(spark, SF, "documents"))
+    _, survivors = _funnel_split(docs, keep_cols=("doc_id", "lang"))
+    kept = survivors.filter("late_verdict = 'kept'").select("doc_id", "text")
+    assert "EvalPython" not in simple(kept)
+    above, below = _filters_above_round_robin(simple(kept))
+    assert (above, below) == (1, 0)
+
+    funnel = extended_queries()["text_filter_funnel"](spark, SF)
+    above, below = _filters_above_round_robin(simple(funnel))
+    assert (above, below) == (2, 0)
+    assert "Union" in simple(funnel)
 
 
 def test_dup_spans_hashed_equi_join_no_text_shuffle(spark):
