@@ -119,13 +119,19 @@ def _sql_double(x: float) -> str:
     return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
+def _ident(name: str) -> str:
+    """A column name as a SQL identifier: backtick-quoted, with any
+    backtick inside doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _margin_sql(feature_cols: list[str], weights: list[float]) -> str:
     """Textual twin of _margin(): same left-associated + chain, same
     ROUND — the SQL parser builds the identical expression tree."""
     terms = " + ".join(
         [_sql_double(weights[0])]
         + [
-            f"{_sql_double(weights[j + 1])} * `{c}`"
+            f"{_sql_double(weights[j + 1])} * {_ident(c)}"
             for j, c in enumerate(feature_cols)
         ]
     )
@@ -165,10 +171,10 @@ class _adaptive_off:
 
 
 def _check_reserved(cols: list[str], reserved: set[str]) -> None:
-    """The GD chains stage internal columns (residuals, carried
-    weights, gradient sums) alongside the caller's feature/label/fold
-    columns in one projection; a user column with one of those names
-    would silently shadow the staged value. Fail loudly instead."""
+    """The GD rounds stage internal columns (residuals, counts,
+    gradient sums, weights) next to the caller's feature/label/fold
+    columns; a user column with one of those names could shadow a
+    staged value. Fail loudly instead."""
     hit = sorted(set(cols) & reserved)
     if hit:
         raise ValueError(
@@ -177,181 +183,67 @@ def _check_reserved(cols: list[str], reserved: set[str]) -> None:
         )
 
 
-def _chunk_sizes(iterations: int, depth: int) -> list[int]:
-    """Split `iterations` GD rounds into driver-collect chunks of at
-    most `depth` lazily-chained rounds each."""
-    depth = max(1, int(depth))
-    out = []
-    left = iterations
-    while left > 0:
-        out.append(min(depth, left))
-        left -= out[-1]
-    return out
-
-
 def logreg_train(
     feats: DataFrame,
     feature_cols: list[str],
     label_col: str,
     iterations: int = 8,
     lr: float = 4.0,
-    lazy: bool = True,
-    chain_depth: int | None = None,
 ) -> list[float]:
     """Fit [bias, w1..wd] by `iterations` full-batch GD rounds from
-    w = 0. One combinable aggregate per round. The rounds run in
-    CHUNKS of ``chain_depth`` rounds per submitted action: within a
-    chunk, round t's weights ride a broadcast 1-row frame into round
-    t+1's margin (lazy chain — no per-round Py4J collect); between
-    chunks, the O(d) weight row is collected and re-embedded as float
-    literals, so the plan tree's nesting depth is bounded by the chunk
-    size instead of growing with `iterations`. ``chain_depth=1`` is
-    the collect-per-round formulation (small standalone plans);
-    ``chain_depth=iterations`` is the single-action fully-lazy chain.
-    ``lazy`` is the legacy spelling: when ``chain_depth`` is None,
-    lazy=True means `iterations`, lazy=False means 1.
+    w = 0. Each round is one combinable aggregate and one collect of
+    the O(d) weight row, which the next round re-embeds as exact
+    double literals.
 
-    Every round stages the residual ONCE in a projection (round-7
-    measurement: embedding the sigmoid tree in each of the d+2
-    gradient sums multiplies the per-round Catalyst analysis cost,
-    which dominates at small SF; the staged column computes the
-    identical IEEE ops). Weight values are bit-identical across every
-    chain depth — same expressions, with Python-float literal
-    re-embedding replaced by the double column carrying the identical
-    value (pinned by test_lazy_chain_matches_collect_per_round_reference,
-    test_logreg_lazy_eager_paths_identical and
-    test_logreg_chain_depths_identical).
-
-    Depth choice is a measured per-consumer trade (rounds 6–8): the
-    deep chain's Catalyst analysis cost grows superlinearly with
-    nesting (it dominated text_conformal_gate +32% in the r5 pair),
-    while depth 1 pays 8 collect+plan-rebuild synchronizations; at a
-    real 100 TB scan the per-round aggregate dwarfs either overhead
-    and all depths tie.
+    The round's projection, aggregate and weight update are built as
+    SQL strings and parsed JVM-side in two py4j round trips instead of
+    ~90 Column calls: the round-10 barrier profile measured Python-side
+    expression construction at ~45% of each barrier
+    (BENCH_ISOLATIONS_r10/barrier_profile.json). The parsed trees are
+    the exact twins of the Column forms (_margin, hard_sigmoid): same
+    ops, same order, same literals, so the weights are bit-identical
+    to a Column-built round (pinned by
+    test_logreg_matches_column_built_reference). Every round stages the
+    residual ONCE in a projection (round-7 measurement: embedding the
+    sigmoid tree in each of the d+2 gradient sums multiplies the
+    per-round Catalyst analysis cost; the staged column computes the
+    identical IEEE ops).
 
     Caller should persist `feats` when the feature projection is
-    expensive (each round re-scans it either way)."""
+    expensive (each round re-scans it)."""
     d = len(feature_cols)
     reserved = {"_r", "n"}
     reserved.update(f"_w{j}" for j in range(d + 1))
-    reserved.update(f"_pw{j}" for j in range(d + 1))
     reserved.update(f"g{j}" for j in range(d + 1))
     _check_reserved(
         [c for c in feats.columns if c != label_col and c not in feature_cols],
         reserved,
     )
-    depth = (
-        chain_depth
-        if chain_depth is not None
-        else (iterations if lazy else 1)
-    )
+    cols = [_ident(c) for c in feature_cols]
     w = [0.0] * (d + 1)
     with _adaptive_off(feats):
-        for rounds in _chunk_sizes(iterations, depth):
-            if rounds == 1:
-                # Fast path for the collect-per-round formulation every
-                # bench consumer uses: the round's projection, aggregate
-                # and weight update are built as SQL strings parsed
-                # JVM-side in TWO py4j round trips instead of ~90 Column
-                # calls — the round-10 barrier profile measured the
-                # Python-side expression construction at ~45% of each
-                # barrier (BENCH_ISOLATIONS_r10/barrier_profile.json).
-                # The parsed trees are the exact twins of the Column
-                # path below (same ops, same order, same literals), so
-                # the weight chain stays bit-identical — pinned by
-                # test_logreg_matches_manual_reference (Column-built
-                # per-round replay) and the cross-depth identity tests
-                # (fast depth-1 vs Column lazy chains).
-                resid = (
-                    f"({_sigmoid_sql(_margin_sql(feature_cols, w))}"
-                    f" - `{label_col}`) AS _r"
-                )
-                proj = feats.selectExpr(
-                    *[f"`{c}`" for c in feature_cols], resid
-                )
-                aggs = ["COUNT(1) AS n"]
+        for _ in range(iterations):
+            resid = (
+                f"({_sigmoid_sql(_margin_sql(feature_cols, w))}"
+                f" - {_ident(label_col)}) AS _r"
+            )
+            proj = feats.selectExpr(*cols, resid)
+            aggs = ["COUNT(1) AS n"]
+            aggs.append(
+                f"SUM(CAST(ROUND(_r, {GRAD_SCALE}) AS DECIMAL(38,12))) AS g0"
+            )
+            for j, c in enumerate(cols):
                 aggs.append(
-                    f"SUM(CAST(ROUND(_r, {GRAD_SCALE})"
-                    f" AS DECIMAL(38,12))) AS g0"
+                    f"SUM(CAST(ROUND(_r * {c}, {GRAD_SCALE})"
+                    f" AS DECIMAL(38,12))) AS g{j + 1}"
                 )
-                for j, c in enumerate(feature_cols):
-                    aggs.append(
-                        f"SUM(CAST(ROUND(_r * `{c}`, {GRAD_SCALE})"
-                        f" AS DECIMAL(38,12))) AS g{j + 1}"
-                    )
-                upd = [
-                    f"ROUND({_sql_double(w[j])} - {_sql_double(lr)}"
-                    f" * (CAST(g{j} AS DOUBLE) / CAST(n AS DOUBLE)),"
-                    f" {W_SCALE}) AS _w{j}"
-                    for j in range(d + 1)
-                ]
-                row = proj.selectExpr(*aggs).selectExpr(*upd).first()
-                w = [float(row[f"_w{j}"]) for j in range(d + 1)]
-                continue
-            w_df: DataFrame | None = None
-            for t in range(rounds):
-                if t == 0:
-                    # chunk head: weights are literals — stage the
-                    # residual directly, no broadcast frame needed
-                    proj = feats.select(
-                        *feature_cols,
-                        (
-                            hard_sigmoid(_margin(feature_cols, w))
-                            - F.col(label_col)
-                        ).alias("_r"),
-                    )
-                    pw = [F.lit(w[j]) for j in range(d + 1)]
-                    carry: list[Column] = []
-                else:
-                    z: Column = F.col("_w0")
-                    for j, c in enumerate(feature_cols):
-                        z = z + F.col(f"_w{j + 1}") * F.col(c)
-                    proj = feats.crossJoin(F.broadcast(w_df)).select(
-                        *feature_cols,
-                        (
-                            hard_sigmoid(F.round(z, Z_SCALE))
-                            - F.col(label_col)
-                        ).alias("_r"),
-                        *[F.col(f"_w{j}") for j in range(d + 1)],
-                    )
-                    pw = [F.col(f"_pw{j}") for j in range(d + 1)]
-                    # carry the (constant) previous weights through
-                    # the agg
-                    carry = [
-                        F.min(F.col(f"_w{j}")).alias(f"_pw{j}")
-                        for j in range(d + 1)
-                    ]
-                r = F.col("_r")
-                aggs = [F.count(F.lit(1)).alias("n")]
-                aggs.append(
-                    F.sum(
-                        F.round(r, GRAD_SCALE).cast("decimal(38,12)")
-                    ).alias("g0")
-                )
-                for j, c in enumerate(feature_cols):
-                    aggs.append(
-                        F.sum(
-                            F.round(r * F.col(c), GRAD_SCALE).cast(
-                                "decimal(38,12)"
-                            )
-                        ).alias(f"g{j + 1}")
-                    )
-                aggs += carry
-                w_df = proj.agg(*aggs).select(
-                    *[
-                        F.round(
-                            pw[j]
-                            - F.lit(float(lr))
-                            * (
-                                F.col(f"g{j}").cast("double")
-                                / F.col("n").cast("double")
-                            ),
-                            W_SCALE,
-                        ).alias(f"_w{j}")
-                        for j in range(d + 1)
-                    ]
-                )
-            row = w_df.first()
+            upd = [
+                f"ROUND({_sql_double(w[j])} - {_sql_double(lr)}"
+                f" * (CAST(g{j} AS DOUBLE) / CAST(n AS DOUBLE)),"
+                f" {W_SCALE}) AS _w{j}"
+                for j in range(d + 1)
+            ]
+            row = proj.selectExpr(*aggs).selectExpr(*upd).first()
             w = [float(row[f"_w{j}"]) for j in range(d + 1)]
     return w
 
@@ -371,39 +263,29 @@ def logreg_train_folds(
     k: int,
     iterations: int = 8,
     lr: float = 4.0,
-    lazy: bool = True,
-    chain_depth: int | None = None,
 ) -> tuple[list[list[float]], list[int]]:
     """All k leave-one-fold-out trainings in one fold-parallel chain:
     each GD round is ONE combinable aggregate whose expressions
     compute, for every held-out fold i, the gradient of model i over
-    the rows with fold != i (a `when(fold != i, …)` guard inside each
+    the rows with fold != i (a `CASE WHEN fold != i` guard inside each
     decimal SUM — nulls drop out of SUM, so each fold's decimal total
     adds exactly the same rounded terms as the per-fold loop, in any
-    order). The rounds run in CHUNKS of ``chain_depth`` lazily-chained
-    rounds per submitted action (logreg_train's scheme — see its
-    docstring for the depth trade; ``lazy`` is the legacy spelling:
-    chain_depth None + lazy=True → `iterations`, lazy=False → 1).
-    Every round stages each fold's residual once in a projection (the
-    round-7 device: the k·(d+2) gradient sums stay shallow instead of
-    each embedding a sigmoid-tree copy; identical IEEE ops, so the
-    weight chains stay bit-identical). The per-fold weight chains stay
-    bit-identical to logreg_train on the corresponding subset — the CV
-    oracle's per-fold CTE unrolls keep matching unchanged (pinned by
-    test_folds_lazy_eager_paths_identical and
-    test_folds_chain_depths_identical).
+    order). Each round is built as SQL strings and collected, like
+    logreg_train's; every round stages each fold's residual once in a
+    projection. The per-fold weight chains stay bit-identical to
+    logreg_train on the corresponding subset, so the CV oracle's
+    per-fold CTE unrolls keep matching unchanged (pinned by
+    test_folds_match_per_subset_training).
 
     Returns (k weight vectors, k train-row counts).
     Caller should persist `folds`."""
     d = len(feature_cols)
-    fold = F.col(fold_col)
     reserved = {"_fold_g"}
     for i in range(k):
         reserved.add(f"_r{i}")
         reserved.add(f"n_{i}")
         reserved.add(f"_n_{i}")
         reserved.update(f"_w{i}_{j}" for j in range(d + 1))
-        reserved.update(f"_pw{i}_{j}" for j in range(d + 1))
         reserved.update(f"g{i}_{j}" for j in range(d + 1))
     _check_reserved(
         [
@@ -413,178 +295,50 @@ def logreg_train_folds(
         ],
         reserved,
     )
-    depth = (
-        chain_depth
-        if chain_depth is not None
-        else (iterations if lazy else 1)
-    )
+    cols = [_ident(c) for c in feature_cols]
     ws = [[0.0] * (d + 1) for _ in range(k)]
     ns = [0] * k
     with _adaptive_off(folds):
-        for rounds in _chunk_sizes(iterations, depth):
-            if rounds == 1:
-                # SQL-string fast path (see logreg_train): one parsed
-                # selectExpr chain replaces ~k× the Column-building py4j
-                # traffic of the single-model round; trees are exact
-                # twins of the Column path, weights bit-identical
-                # (test_folds_lazy_eager_paths_identical +
-                # test_folds_chain_depths_identical pin fast depth-1
-                # against the Column lazy chains).
-                resids = [
-                    f"({_sigmoid_sql(_margin_sql(feature_cols, ws[i]))}"
-                    f" - `{label_col}`) AS _r{i}"
-                    for i in range(k)
-                ]
-                proj = folds.selectExpr(
-                    f"`{fold_col}` AS _fold_g",
-                    *[f"`{c}`" for c in feature_cols],
-                    *resids,
-                )
-                aggs = []
-                for i in range(k):
-                    guard = f"_fold_g != {i}"
-                    aggs.append(
-                        f"SUM(CAST(CASE WHEN {guard} THEN 1 END"
-                        f" AS BIGINT)) AS n_{i}"
-                    )
-                    aggs.append(
-                        f"SUM(CAST(CASE WHEN {guard} THEN"
-                        f" ROUND(_r{i}, {GRAD_SCALE}) END"
-                        f" AS DECIMAL(38,12))) AS g{i}_0"
-                    )
-                    for j, c in enumerate(feature_cols):
-                        aggs.append(
-                            f"SUM(CAST(CASE WHEN {guard} THEN"
-                            f" ROUND(_r{i} * `{c}`, {GRAD_SCALE}) END"
-                            f" AS DECIMAL(38,12))) AS g{i}_{j + 1}"
-                        )
-                upd = [
-                    f"ROUND({_sql_double(ws[i][j])} - {_sql_double(lr)}"
-                    f" * (CAST(g{i}_{j} AS DOUBLE)"
-                    f" / CAST(n_{i} AS DOUBLE)), {W_SCALE}) AS _w{i}_{j}"
-                    for i in range(k)
-                    for j in range(d + 1)
-                ] + [f"n_{i} AS _n_{i}" for i in range(k)]
-                row = proj.selectExpr(*aggs).selectExpr(*upd).first()
-                ws = [
-                    [float(row[f"_w{i}_{j}"]) for j in range(d + 1)]
-                    for i in range(k)
-                ]
-                ns = [int(row[f"_n_{i}"]) for i in range(k)]
-                continue
-            w_df: DataFrame | None = None
-            for t in range(rounds):
-                if t == 0:
-                    # chunk head: weights are literals — no broadcast
-                    proj = folds.select(
-                        fold.alias("_fold_g"),
-                        *feature_cols,
-                        *[
-                            (
-                                hard_sigmoid(
-                                    _margin(feature_cols, ws[i])
-                                )
-                                - F.col(label_col)
-                            ).alias(f"_r{i}")
-                            for i in range(k)
-                        ],
-                    )
-
-                    def pw(i: int, j: int) -> Column:
-                        return F.lit(ws[i][j])
-
-                    carry: list[Column] = []
-                else:
-                    resids = []
-                    for i in range(k):
-                        z: Column = F.col(f"_w{i}_0")
-                        for j, c in enumerate(feature_cols):
-                            z = z + F.col(f"_w{i}_{j + 1}") * F.col(c)
-                        resids.append(
-                            (
-                                hard_sigmoid(F.round(z, Z_SCALE))
-                                - F.col(label_col)
-                            ).alias(f"_r{i}")
-                        )
-                    proj = folds.crossJoin(F.broadcast(w_df)).select(
-                        fold.alias("_fold_g"),
-                        *feature_cols,
-                        *resids,
-                        *[
-                            F.col(f"_w{i}_{j}")
-                            for i in range(k)
-                            for j in range(d + 1)
-                        ],
-                    )
-
-                    def pw(i: int, j: int) -> Column:
-                        return F.col(f"_pw{i}_{j}")
-
-                    carry = [
-                        F.min(F.col(f"_w{i}_{j}")).alias(f"_pw{i}_{j}")
-                        for i in range(k)
-                        for j in range(d + 1)
-                    ]
-                aggs = []
-                for i in range(k):
-                    guard = F.col("_fold_g") != i
-                    r = F.col(f"_r{i}")
-                    aggs.append(
-                        F.sum(
-                            F.when(guard, F.lit(1)).cast("long")
-                        ).alias(f"n_{i}")
-                    )
-                    aggs.append(
-                        F.sum(
-                            F.when(
-                                guard, F.round(r, GRAD_SCALE)
-                            ).cast("decimal(38,12)")
-                        ).alias(f"g{i}_0")
-                    )
-                    for j, c in enumerate(feature_cols):
-                        aggs.append(
-                            F.sum(
-                                F.when(
-                                    guard,
-                                    F.round(r * F.col(c), GRAD_SCALE),
-                                ).cast("decimal(38,12)")
-                            ).alias(f"g{i}_{j + 1}")
-                        )
-                aggs += carry
-                # counts are recomputed every round (fold sizes are
-                # constant); carry them only out of the chunk's FINAL
-                # round, underscore-prefixed like the weight columns,
-                # so the inter-round broadcast row stays k·(d+1) wide.
-                final = t == rounds - 1
-                w_df = proj.agg(*aggs).select(
-                    *[
-                        F.round(
-                            pw(i, j)
-                            - F.lit(float(lr))
-                            * (
-                                F.col(f"g{i}_{j}").cast("double")
-                                / F.col(f"n_{i}").cast("double")
-                            ),
-                            W_SCALE,
-                        ).alias(f"_w{i}_{j}")
-                        for i in range(k)
-                        for j in range(d + 1)
-                    ],
-                    *(
-                        [
-                            F.col(f"n_{i}").alias(f"_n_{i}")
-                            for i in range(k)
-                        ]
-                        if final
-                        else []
-                    ),
-                )
-            upd = w_df.first()
-            ws = [
-                [float(upd[f"_w{i}_{j}"]) for j in range(d + 1)]
+        for _ in range(iterations):
+            resids = [
+                f"({_sigmoid_sql(_margin_sql(feature_cols, ws[i]))}"
+                f" - {_ident(label_col)}) AS _r{i}"
                 for i in range(k)
             ]
-            ns = [int(upd[f"_n_{i}"]) for i in range(k)]
+            proj = folds.selectExpr(
+                f"{_ident(fold_col)} AS _fold_g", *cols, *resids
+            )
+            aggs = []
+            for i in range(k):
+                guard = f"_fold_g != {i}"
+                aggs.append(
+                    f"SUM(CAST(CASE WHEN {guard} THEN 1 END AS BIGINT))"
+                    f" AS n_{i}"
+                )
+                aggs.append(
+                    f"SUM(CAST(CASE WHEN {guard} THEN"
+                    f" ROUND(_r{i}, {GRAD_SCALE}) END"
+                    f" AS DECIMAL(38,12))) AS g{i}_0"
+                )
+                for j, c in enumerate(cols):
+                    aggs.append(
+                        f"SUM(CAST(CASE WHEN {guard} THEN"
+                        f" ROUND(_r{i} * {c}, {GRAD_SCALE}) END"
+                        f" AS DECIMAL(38,12))) AS g{i}_{j + 1}"
+                    )
+            upd = [
+                f"ROUND({_sql_double(ws[i][j])} - {_sql_double(lr)}"
+                f" * (CAST(g{i}_{j} AS DOUBLE)"
+                f" / CAST(n_{i} AS DOUBLE)), {W_SCALE}) AS _w{i}_{j}"
+                for i in range(k)
+                for j in range(d + 1)
+            ] + [f"n_{i} AS _n_{i}" for i in range(k)]
+            row = proj.selectExpr(*aggs).selectExpr(*upd).first()
+            ws = [
+                [float(row[f"_w{i}_{j}"]) for j in range(d + 1)]
+                for i in range(k)
+            ]
+            ns = [int(row[f"_n_{i}"]) for i in range(k)]
     return ws, ns
 
 
@@ -1005,8 +759,6 @@ def logreg_cv(
     k: int = 3,
     iterations: int = 8,
     lr: float = 4.0,
-    lazy: bool = False,
-    chain_depth: int | None = None,
 ) -> DataFrame:
     """K-fold cross-validation of the GD classifier: md5 hash-bucket
     folds (engine-portable, partition-invariant — the split_assign
@@ -1017,13 +769,7 @@ def logreg_cv(
     standardized by the caller over the full frame (fit-time
     convention pinned in the oracle). All k trainings share ONE
     scalar-output aggregate per GD round (logreg_train_folds), so the
-    whole CV costs `iterations` rounds, not k·`iterations`.
-
-    Defaults to lazy=False: the k-fold round aggregate is 3× wider
-    than the single-model one, so the lazily nested plan is deeper and
-    heavier still — measured 8.08→6.36 s at sf0.1 (round 6,
-    text_classifier_cv, min-of-3) by collecting per round instead;
-    values bit-identical (test_folds_lazy_eager_paths_identical)."""
+    whole CV costs `iterations` rounds, not k·`iterations`."""
     from functools import reduce
 
     from nashville_etl_service_backup_spark.operators.text_analysis import (
@@ -1032,8 +778,7 @@ def logreg_cv(
 
     folds = feats.withColumn("_fold", hash_bucket(F.col(id_col), k))
     ws, ns = logreg_train_folds(
-        folds, feature_cols, label_col, "_fold", k, iterations, lr,
-        lazy=lazy, chain_depth=chain_depth,
+        folds, feature_cols, label_col, "_fold", k, iterations, lr
     )
     outs = []
     for i in range(k):

@@ -254,10 +254,10 @@ def sim_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="ivf_inc_")
     src, idx, ckpt = f"{work}/src", f"{work}/index", f"{work}/ckpt"
     corpus.repartition(4).write.parquet(src)
-    q = incremental_ivf(spark, src, idx, ckpt, cents, commit_log=True)
+    q = incremental_ivf(spark, src, idx, ckpt, cents)
     q.awaitTermination(300)
     q.stop()
-    index = read_ivf_index(spark, idx, commit_log=True)
+    index = read_ivf_index(spark, idx)
     return ivf_probe_topk(index, cents, query, k=10, n_probe=2)
 
 
@@ -889,30 +889,27 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _funnel_split(docs: DataFrame, keep_cols: tuple[str, ...] = ()):
-    """The corpus-filter funnel as one JVM-only narrow map, split into
-    its two halves. Each document is tokenized once, below a
-    CollectMetrics node (``observe``; its count is never read): Catalyst
-    pushes no Filter through one, so the funnel runs above spread()'s
-    round-robin Exchange, in every task, instead of in the scan's.
-    Every rule reads the one token array: n_tokens, the stopword and
-    unique-token ratios, the language hits and the bigrams.
+def _funnel_verdicts(docs: DataFrame, keep_cols: tuple[str, ...] = ()):
+    """The corpus-filter funnel as one JVM-only narrow map: every
+    document gets its FIRST failing rule as ``verdict`` — too_short |
+    contains_pii (the cheap pre-filter) | repetitive | no_language |
+    low_quality — or ``kept``, next to ``keep_cols`` and ``text``. Each
+    document is tokenized once and every rule reads the one token
+    array: n_tokens, the stopword and unique-token ratios, the language
+    hits and the bigrams. The late rules run only where the pre-filter
+    passed (``coalesce``), so each PII regex runs once per document.
 
-    Returns (early, survivors): `early` carries the cheap pre-filter
-    verdict (too_short | contains_pii), `survivors` carries
-    `late_verdict` (repetitive | no_language | low_quality | kept) for
-    the documents that passed it. Both keep ``keep_cols`` alongside the
-    verdict for downstream stages."""
+    The verdict projection sits below a CollectMetrics node
+    (``observe``; its count is never read): Catalyst pushes no Filter
+    through one, so a consumer's ``verdict`` filter neither re-evaluates
+    the verdict nor sinks below spread()'s round-robin Exchange into
+    the scan's single task."""
     tokens, pre, late = _funnel_exprs(SparkContext._gateway)
+    staged = docs.select(*keep_cols, "text", tokens.alias("_tk"))
     # observe() stops filter pushdown below this point
-    staged = docs.select(*keep_cols, "text", tokens.alias("_tk")).observe(
-        "funnel_docs", F.count(F.lit(1))
-    )
-    early = staged.filter(pre.isNotNull()).select(*keep_cols, pre.alias("verdict"))
-    survivors = staged.filter(pre.isNull()).select(
-        *keep_cols, "text", late.alias("late_verdict")
-    )
-    return early, survivors
+    return staged.select(
+        *keep_cols, "text", F.coalesce(pre, late).alias("verdict")
+    ).observe("funnel_docs", F.count(F.lit(1)))
 
 
 @functools.lru_cache(maxsize=4)
@@ -942,14 +939,12 @@ def _funnel_exprs(gateway) -> tuple[Column, Column, Column]:
 def text_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-filter funnel (C4/Gopher-style): every document gets
     its FIRST failing rule — length → PII → repetition → language →
-    quality — and the funnel is tallied per verdict. See
-    :func:`_funnel_split` for the two halves; both branches aggregate
-    map-side before the tiny union."""
+    quality — and the funnel is tallied per verdict
+    (:func:`_funnel_verdicts`)."""
     # spread: every funnel rule is per-row scalar CPU
     docs = spread(load(spark, sf_dir, "documents"))
-    early, survivors = _funnel_split(docs)
     return (
-        early.unionAll(survivors.select(F.col("late_verdict").alias("verdict")))
+        _funnel_verdicts(docs)
         .groupBy("verdict")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -1123,14 +1118,14 @@ def llm_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nashville_etl_service_backup_spark.operators import register_checkpoint
 
     docs = spread(load(spark, sf_dir, "documents"))
-    _, survivors = _funnel_split(docs, keep_cols=("doc_id", "lang"))
+    verdicts = _funnel_verdicts(docs, keep_cols=("doc_id", "lang"))
     # three downstream stages consume the kept set (LSH signatures, the
     # resolve anti-join's left side, the split/token aggregate) —
     # checkpoint it once, or the funnel re-runs per consumer.
     # This is the materialization barrier a real pipeline puts between
     # "curated corpus" and everything derived from it.
     kept = register_checkpoint(
-        survivors.filter(F.col("late_verdict") == "kept")
+        verdicts.filter(F.col("verdict") == "kept")
         .select("doc_id", "lang", "text")
         .localCheckpoint()
     )
@@ -2868,9 +2863,10 @@ def llm_tokenize_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = spread(load(spark, sf_dir, "documents"))
-    _, survivors = _funnel_split(docs, keep_cols=("doc_id",))
-    kept = survivors.filter(F.col("late_verdict") == "kept").select(
-        "doc_id", "text"
+    kept = (
+        _funnel_verdicts(docs, keep_cols=("doc_id",))
+        .filter(F.col("verdict") == "kept")
+        .select("doc_id", "text")
     )
     counts = bpe_segment_counts(kept, "doc_id", "text", _BPE_MERGES).select(
         "doc_id", F.col("n_bpe_tokens").alias("n_tokens")
@@ -3223,11 +3219,7 @@ def text_score_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fcols = ["x1", "x2", "x3"]
     feats = track_persist(standardize(raw, fcols))
-    # lazy=False: single-model consumers measured faster with
-    # collect-per-round at sf0.1 (round 6; see logreg_train docstring)
-    w = logreg_train(
-        feats.filter(F.col("is_tr")), fcols, "y", lazy=False
-    )
+    w = logreg_train(feats.filter(F.col("is_tr")), fcols, "y")
     s = F.round(logreg_score(fcols, w), 6)
     binned = feats.select(
         F.least(F.floor(s * 10).cast("int"), F.lit(9)).alias("bin"),
@@ -4202,9 +4194,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fcols = ["x1", "x2", "x3"]
     feats = track_persist(standardize(raw, fcols))
-    w = logreg_train(
-        feats, fcols, "y", iterations=8, lr=4.0, lazy=False
-    )
+    w = logreg_train(feats, fcols, "y", iterations=8, lr=4.0)
     p = logreg_score(fcols, w)
     return feats.select(
         "doc_id",
@@ -4643,9 +4633,7 @@ def text_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     train = feats.filter(F.col("_b") >= 2)
-    w = logreg_train(
-        train, fcols, "y", iterations=8, lr=4.0, lazy=False
-    )
+    w = logreg_train(train, fcols, "y", iterations=8, lr=4.0)
     p = F.round(logreg_score(fcols, w), 6)
     # nonconformity of the TRUE class: 1 - p for y=1, p for y=0
     s_true = F.round(

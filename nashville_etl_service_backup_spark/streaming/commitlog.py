@@ -1,19 +1,19 @@
 """Minimal manifest commit log — transactional visibility for the
-file-based continuous aggregates.
+file-based continuous aggregates and the streaming stores.
 
 The reference's loader gets atomicity for free from Postgres
-transactions (transform_data.py's INSERT batches — SURVEY §2.2 K2);
-the Spark-side incremental rollup/CMS/HLL partials (streaming/
-pipeline.py) instead live as plain ``batch_id=<id>/`` parquet
-directories, which leaves three documented gaps: a reader can observe
-a partial directory while it is being (over)written, a crash can leave
-a torn directory that readers then merge, and compaction's
-multi-directory swap is not atomic (its docstring says "use a
-transactional table format"). This module is that table format, pared
-to exactly what the partials need — the Delta/Iceberg core idea
-(an append-only log of manifests; the current snapshot is the fold of
-the log; data files are immutable and invisible until a manifest
-names them) without the format's schema/stats machinery:
+transactions (transform_data.py's INSERT batches — SURVEY §2.2 K2).
+The Spark-side incremental partials (the rollup/CMS/HLL aggregates and
+the novelty-gate stores in streaming/pipeline.py, the IVF postings in
+streaming/ivf.py) are parquet ``batch_id=<id>/`` directories, and this
+log is the only way a reader sees them: a directory a reader merges
+is one a manifest names, so a reader never observes a directory while
+it is being (over)written, never merges a crash's torn directory, and
+compaction's multi-directory swap is one atomic step. It is the
+Delta/Iceberg core idea (an append-only log of manifests; the current
+snapshot is the fold of the log; data files are immutable and
+invisible until a manifest names them) without the format's
+schema/stats machinery:
 
     table_root/
       batch_id=0/  batch_id=1/ ...     (parquet dirs, written first)
@@ -23,9 +23,10 @@ names them) without the format's schema/stats machinery:
         00000002.json   {"add": ["batch_id=-1"],
                          "remove": ["batch_id=0", "batch_id=1"]}
 
-- WRITE protocol: write the data directory fully, then `commit(root,
-  add=[dir])`. A crash between the two leaves an orphan directory that
-  no reader ever merges (vacuum sweeps it later).
+- WRITE protocol (`write_partials`): write the data directory fully,
+  then `commit(root, add=[dir])`. A crash between the two leaves an
+  orphan directory that no reader ever merges (vacuum sweeps it
+  later).
 - COMMIT protocol (optimistic, multi-writer-safe on a POSIX fs): the
   manifest body is written to a hidden temp file, fsynced, then
   `os.link`ed to the next sequential slot ``NNNNNNNN.json`` — link is
@@ -50,10 +51,13 @@ names them) without the format's schema/stats machinery:
   swap shape) — never via a bare replayed add.
 - COMPACTION: write the folded directory, then ONE manifest
   {add: [compacted], remove: [inputs]} — the reader-visible swap is a
-  single atomic link, so compaction may now run concurrently with
-  readers (the restriction compact_rollup documents is lifted in
-  compact_rollup_committed). Removed/orphan directories are deleted by
+  single atomic link, so compaction (pipeline.compact_rollup) may run
+  concurrently with readers. Removed/orphan directories are deleted by
   `vacuum`, which never touches live ones.
+- ADOPTION: a store written as bare ``batch_id=`` directories with no
+  log (the layout before the log existed) reads as empty — a reader
+  raises FileNotFoundError. `adopt(root)` commits those directories
+  as the store's first manifest, once.
 
 Scale notes: manifests are O(changed directories) — bytes, not data;
 the fold is a driver-side listing of one small directory (Delta does
@@ -186,6 +190,37 @@ def read_committed(spark, root: str, as_of: int | None = None):
     if not paths:
         raise FileNotFoundError(f"no committed partials under {root}")
     return spark.read.option("basePath", root).parquet(*paths)
+
+
+def write_partials(batch_id: int, *partials) -> None:
+    """The WRITE protocol for one micro-batch: each ``(frame, root)``
+    pair is written to ``root/batch_id=<batch_id>/`` with directory
+    overwrite, and only after every directory is written are they
+    committed, one manifest per root. A re-delivered batch rewrites
+    the same directories and its duplicate adds are no-ops, so a
+    replay can never double-count."""
+    name = f"batch_id={batch_id}"
+    for part, root in partials:
+        part.write.mode("overwrite").parquet(f"{root.rstrip('/')}/{name}")
+    for _, root in partials:
+        commit(root, add=[name])
+
+
+def adopt(root: str) -> int | None:
+    """Commit a log-less store's ``batch_id=`` directories as its first
+    manifest, so the committed readers see exactly what a directory
+    listing of the store would have merged. Returns the manifest index,
+    or None when the store already has a log (or holds no directory) —
+    running it twice is harmless."""
+    if log_entries(root):
+        return None
+    r = root.rstrip("/")
+    dirs = sorted(
+        e
+        for e in os.listdir(r)
+        if e.startswith("batch_id=") and os.path.isdir(os.path.join(r, e))
+    )
+    return commit(root, add=dirs)
 
 
 def vacuum(root: str, only: list[str] | None = None) -> list[str]:

@@ -20,7 +20,6 @@ Plus the windowed-aggregation surface the target engine needs
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -28,6 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 from nashville_etl_service_backup_spark.plans.canonicalize import run_pipeline
 from nashville_etl_service_backup_spark.plans.load import load_events
 from nashville_etl_service_backup_spark.schemas import RAW_ZONE_SCHEMA
+from nashville_etl_service_backup_spark.streaming import commitlog
 
 
 def raw_zone_stream(spark: SparkSession, raw_path: str) -> DataFrame:
@@ -268,37 +268,29 @@ def incremental_rollup(
     window: str = "1 hour",
     ts_col: str = "ts",
     key_col: str = "event_type",
-    commit_log: bool = True,
 ) -> StreamingQuery:
     """Incrementally-maintained hourly rollup (hypertable-style
     continuous aggregate), idempotent under micro-batch replay.
 
-    ``commit_log=True`` runs the write through the manifest commit log
-    (streaming/commitlog.py — the file-based analog of the Postgres
-    transactionality the reference's loader gets for free): the batch
-    directory becomes reader-visible only via an atomic manifest
-    append, so torn/uncommitted writes are never merged, readers get
-    snapshot isolation, and compact_rollup_committed may run
-    concurrently with them. Replay stays idempotent — the re-delivered
-    batch rewrites the same directory and its duplicate `add` is a
-    no-op. Default False preserves the list-the-directory layout the
-    existing tests and oracle queries pin.
-
     Each micro-batch writes ONLY its own partial aggregate (window, key,
     n, total) to ``rollup_path/batch_id=<id>/`` with directory-level
-    overwrite. foreachBatch is at-least-once: after a crash between sink
-    write and checkpoint commit, the replayed batch re-derives the SAME
-    partial (same input files per the checkpoint) and overwrites the
-    SAME directory — it can never double-count. (The previous
-    read-merge-overwrite design did double-count exactly there, and its
-    blanket cold-start `except` could silently reset the whole rollup.)
+    overwrite, and the directory becomes reader-visible only through an
+    atomic manifest append (streaming/commitlog.py — the file-based
+    analog of the Postgres transactionality the reference's loader gets
+    for free): torn or uncommitted writes are never merged and readers
+    get snapshot isolation. foreachBatch is at-least-once: after a
+    crash between sink write and checkpoint commit, the replayed batch
+    re-derives the SAME partial (same input files per the checkpoint),
+    overwrites the SAME directory, and its duplicate `add` is a no-op —
+    it can never double-count. (The previous read-merge-overwrite
+    design did double-count exactly there, and its blanket cold-start
+    `except` could silently reset the whole rollup.)
 
     Readers merge partials with :func:`read_rollup` — valid because
     count/sum are commutative monoids, so batch boundaries never change
     the result. :func:`compact_rollup` folds accumulated partials into
-    one (run it offline; it requires no concurrent writer — a
-    transactional table format would lift that restriction at
-    production).
+    one with a single manifest swap, so it may run while the stream and
+    readers are live.
 
     Scale shape: the per-batch aggregate is map-side combinable and tiny
     (one row per touched window×key); each batch writes only its own
@@ -326,15 +318,7 @@ def incremental_rollup(
                 "total",
             )
         )
-        part.write.mode("overwrite").parquet(
-            f"{rollup_path.rstrip('/')}/batch_id={batch_id}"
-        )
-        if commit_log:
-            from nashville_etl_service_backup_spark.streaming import (
-                commitlog,
-            )
-
-            commitlog.commit(rollup_path, add=[f"batch_id={batch_id}"])
+        commitlog.write_partials(batch_id, (part, rollup_path))
 
     return (
         spark.readStream.schema(schema)
@@ -355,7 +339,6 @@ def incremental_cms(
     key_col: str = "user_id",
     depth: int = 4,
     width: int = 512,
-    commit_log: bool = True,
 ) -> StreamingQuery:
     """Incrementally-maintained count-min sketch over a stream: each
     micro-batch builds its own CMS partial (operators.sketch.cms_build)
@@ -372,15 +355,7 @@ def incremental_cms(
 
     def build_batch(batch: DataFrame, batch_id: int) -> None:
         part = cms_build(batch, key_col, depth=depth, width=width)
-        part.write.mode("overwrite").parquet(
-            f"{cms_path.rstrip('/')}/batch_id={batch_id}"
-        )
-        if commit_log:
-            from nashville_etl_service_backup_spark.streaming import (
-                commitlog,
-            )
-
-            commitlog.commit(cms_path, add=[f"batch_id={batch_id}"])
+        commitlog.write_partials(batch_id, (part, cms_path))
 
     return (
         spark.readStream.schema(schema)
@@ -393,18 +368,10 @@ def incremental_cms(
     )
 
 
-def read_cms(
-    spark: SparkSession, cms_path: str, commit_log: bool = True
-) -> DataFrame:
-    """Merge all per-batch CMS partials into one counter table.
-    ``commit_log=True`` merges only manifest-committed partials (the
-    read_rollup contract)."""
-    if commit_log:
-        from nashville_etl_service_backup_spark.streaming import commitlog
-
-        src = commitlog.read_committed(spark, cms_path)
-    else:
-        src = spark.read.option("basePath", cms_path).parquet(cms_path)
+def read_cms(spark: SparkSession, cms_path: str) -> DataFrame:
+    """Merge the committed per-batch CMS partials into one counter
+    table (the read_rollup contract)."""
+    src = commitlog.read_committed(spark, cms_path)
     return src.groupBy("row_idx", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -414,7 +381,6 @@ def incremental_hll(
     hll_path: str,
     checkpoint_path: str,
     key_col: str = "user_id",
-    commit_log: bool = True,
 ) -> StreamingQuery:
     """Incrementally-maintained HyperLogLog over a stream: each
     micro-batch builds its register partial (operators.sketch.
@@ -430,15 +396,7 @@ def incremental_hll(
 
     def build_batch(batch: DataFrame, batch_id: int) -> None:
         part = hll_registers(batch, key_col, ["event_type"])
-        part.write.mode("overwrite").parquet(
-            f"{hll_path.rstrip('/')}/batch_id={batch_id}"
-        )
-        if commit_log:
-            from nashville_etl_service_backup_spark.streaming import (
-                commitlog,
-            )
-
-            commitlog.commit(hll_path, add=[f"batch_id={batch_id}"])
+        commitlog.write_partials(batch_id, (part, hll_path))
 
     return (
         spark.readStream.schema(schema)
@@ -451,17 +409,10 @@ def incremental_hll(
     )
 
 
-def read_hll(
-    spark: SparkSession, hll_path: str, commit_log: bool = True
-) -> DataFrame:
-    """Merge all per-batch HLL register partials (max per bucket).
-    ``commit_log=True`` merges only manifest-committed partials."""
-    if commit_log:
-        from nashville_etl_service_backup_spark.streaming import commitlog
-
-        src = commitlog.read_committed(spark, hll_path)
-    else:
-        src = spark.read.option("basePath", hll_path).parquet(hll_path)
+def read_hll(spark: SparkSession, hll_path: str) -> DataFrame:
+    """Merge the committed per-batch HLL register partials (max per
+    bucket)."""
+    src = commitlog.read_committed(spark, hll_path)
     return src.groupBy("event_type", "bucket").agg(
         F.max("register").alias("register")
     )
@@ -471,27 +422,22 @@ def read_rollup(
     spark: SparkSession,
     rollup_path: str,
     key_col: str = "event_type",
-    commit_log: bool = True,
 ) -> DataFrame:
-    """Serve the continuous aggregate: merge all per-batch partials.
-    Missing path is NOT swallowed — a vanished rollup is an error, not a
-    cold start (the ADVICE-flagged failure mode). Cells whose count
-    reaches 0 are fully-retracted tombstone residue (only
-    :func:`forget_from_rollup` writes negative partials) and are
-    dropped from the served view.
+    """Serve the continuous aggregate: merge the per-batch partials
+    the manifest log names live — torn or not-yet-committed partials
+    are invisible, and the listing is a snapshot (a concurrent commit
+    lands wholly before or wholly after it). A rollup with nothing
+    committed is an error (FileNotFoundError), not a cold start (the
+    ADVICE-flagged failure mode); a store written without a log needs
+    one ``commitlog.adopt`` first. Cells whose count reaches 0 are
+    fully-retracted tombstone residue (only :func:`forget_from_rollup`
+    writes negative partials) and are dropped from the served view."""
+    return _merge_rollup(commitlog.read_committed(spark, rollup_path), key_col)
 
-    ``commit_log=True`` merges only the directories named live by the
-    manifest log — torn or not-yet-committed partials are invisible,
-    and the listing is a snapshot (a concurrent commit lands wholly
-    before or wholly after it)."""
-    if commit_log:
-        from nashville_etl_service_backup_spark.streaming import commitlog
 
-        src = commitlog.read_committed(spark, rollup_path)
-    else:
-        src = spark.read.option("basePath", rollup_path).parquet(rollup_path)
+def _merge_rollup(partials: DataFrame, key_col: str) -> DataFrame:
     return (
-        src.groupBy("window_start", key_col)
+        partials.groupBy("window_start", key_col)
         .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
         .filter(F.col("n") > 0)
     )
@@ -507,7 +453,6 @@ def forget_from_rollup(
     key_col: str = "event_type",
     id_col: str = "event_id",
     forget_id: int = -2,
-    commit_log: bool = True,
 ) -> None:
     """Right-to-be-forgotten RETRACTION for the continuous aggregate —
     the streaming-side leg of the forget cascade (the batch audit is
@@ -523,8 +468,9 @@ def forget_from_rollup(
 
     Idempotent: re-running overwrites the SAME forget partial from the
     same tombstone set — it can never double-retract (the
-    incremental_rollup replay argument). Run offline like compaction;
-    one forget_id per erasure campaign.
+    incremental_rollup replay argument). Run it offline, since a
+    re-run rewrites a live directory; one forget_id per erasure
+    campaign.
 
     100 TB shape: tombstones broadcast into a semi-join on the raw
     scan; the retraction aggregate is map-side combinable and
@@ -545,13 +491,7 @@ def forget_from_rollup(
         )
         .select(F.col("w.start").alias("window_start"), key_col, "n", "total")
     )
-    part.write.mode("overwrite").parquet(
-        f"{rollup_path.rstrip('/')}/batch_id={forget_id}"
-    )
-    if commit_log:
-        from nashville_etl_service_backup_spark.streaming import commitlog
-
-        commitlog.commit(rollup_path, add=[f"batch_id={forget_id}"])
+    commitlog.write_partials(forget_id, (part, rollup_path))
 
 
 def compact_rollup(
@@ -560,55 +500,7 @@ def compact_rollup(
     key_col: str = "event_type",
     compact_id: int = -1,
 ) -> None:
-    """Fold every partial into the single ``batch_id=<compact_id>``
-    partial and drop the rest. Run offline, never concurrently with the
-    stream: the swap below is not atomic on a plain filesystem (use a
-    transactional table format for that).
-
-    Crash-safe ordering (round-2 ADVICE): the merged copy is staged
-    INSIDE ``rollup_path`` via atomic directory renames BEFORE any old
-    partial is deleted, so a crash at any point leaves a servable
-    rollup — at worst over-counted (staged copy + not-yet-swept old
-    partials side by side) until compaction re-runs, never empty and
-    never missing counts. The old delete-all-then-write order left a
-    window where ``rollup_path`` held nothing and the only copy sat in
-    the tmp dir."""
-    import os
-    import shutil
-
-    root = rollup_path.rstrip("/")
-    # this is the PLAIN-layout compactor: read by directory listing
-    # regardless of the package default (flipped to commit_log=True in
-    # round 10)
-    merged = read_rollup(
-        spark, rollup_path, key_col=key_col, commit_log=False
-    )
-    tmp = root + "__compact"
-    merged.write.mode("overwrite").parquet(tmp)
-    # tmp now holds a full materialized copy; inputs are no longer needed
-    old = [e for e in os.listdir(root) if e.startswith("batch_id=")]
-    final = f"batch_id={compact_id}"
-    if final in old:
-        # re-compaction: the previous compacted partial is itself an
-        # input (already folded into tmp) — move it aside atomically so
-        # the final name is free; it stays servable under the __old
-        # suffix (still a batch_id= dir) until the sweep below
-        shutil.move(f"{root}/{final}", f"{root}/{final}__old")
-        old[old.index(final)] = f"{final}__old"
-    shutil.move(tmp, f"{root}/{final}")  # atomic same-fs rename
-    for entry in old:
-        shutil.rmtree(f"{root}/{entry}")
-
-
-def compact_rollup_committed(
-    spark: SparkSession,
-    rollup_path: str,
-    key_col: str = "event_type",
-    compact_id: int = -1,
-) -> None:
-    """Commit-log compaction — the transactional upgrade of
-    :func:`compact_rollup` (whose docstring's "use a transactional
-    table format" restriction this lifts): fold the LIVE partials into
+    """Commit-log compaction: fold the LIVE partials into
     one ``batch_id=<compact_id>`` directory, then publish the swap as
     ONE manifest {add: [compacted], remove: [inputs]}. From any
     concurrent reader's snapshot the rollup flips atomically from
@@ -636,18 +528,15 @@ def compact_rollup_committed(
     from a crash orphan (round-8 ADVICE)."""
     import os
 
-    from nashville_etl_service_backup_spark.streaming import commitlog
-
     root = rollup_path.rstrip("/")
     inputs = commitlog.snapshot(rollup_path)
     if not inputs:
         raise FileNotFoundError(f"no committed partials under {root}")
-    merged = (
-        spark.read.option("basePath", root)
-        .parquet(*(f"{root}/{d}" for d in inputs))
-        .groupBy("window_start", key_col)
-        .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
-        .filter(F.col("n") > 0)
+    merged = _merge_rollup(
+        spark.read.option("basePath", root).parquet(
+            *(f"{root}/{d}" for d in inputs)
+        ),
+        key_col,
     )
     used = commitlog.ever_added(rollup_path)
     cid = compact_id
@@ -662,41 +551,22 @@ def compact_rollup_committed(
     commitlog.vacuum(rollup_path, only=inputs)
 
 
-def _gate_store(batch: DataFrame, path: str, batch_id: int,
-                commit_log: bool) -> DataFrame | None:
+def _gate_store(batch: DataFrame, path: str, batch_id: int) -> DataFrame | None:
     """Prior-state read shared by the cross-batch novelty gates: every
-    stored partial EXCEPT the current batch's own (the replay
+    committed partial EXCEPT the current batch's own (the replay
     self-exclusion — an at-least-once re-delivery must not flag its
-    docs as duplicates of its own half-written state). None = cold
-    start. With ``commit_log`` the read is manifest-committed-only, so
-    a torn partial from a crashed writer can also never poison the
-    probe."""
-    if commit_log:
-        from nashville_etl_service_backup_spark.streaming import commitlog
-
-        paths = [
-            p
-            for p in commitlog.snapshot_paths(path)
-            if not p.endswith(f"batch_id={batch_id}")
-        ]
-        if not paths:
-            return None
-        return batch.sparkSession.read.option("basePath", path).parquet(
-            *paths
-        )
-    try:
-        store = batch.sparkSession.read.option("basePath", path).parquet(
-            path
-        )
-    except AnalysisException as exc:
-        # only PATH-ABSENT is cold start; re-raise anything else
-        # (the blanket-except failure class round-2 ADVICE flagged)
-        if "PATH_NOT_FOUND" not in str(exc) and (
-            "does not exist" not in str(exc)
-        ):
-            raise
+    docs as duplicates of its own earlier commit). None = cold start.
+    The read is manifest-committed-only, so a torn partial from a
+    crashed writer can never poison the probe."""
+    root = path.rstrip("/")
+    prior = [
+        f"{root}/{d}"
+        for d in commitlog.snapshot(path)
+        if d != f"batch_id={batch_id}"
+    ]
+    if not prior:
         return None
-    return store.filter(F.col("batch_id") != batch_id)
+    return batch.sparkSession.read.option("basePath", root).parquet(*prior)
 
 
 def incremental_lsh_dedup(
@@ -708,7 +578,6 @@ def incremental_lsh_dedup(
     shingle_n: int = 2,
     num_hashes: int = 4,
     bands: int = 2,
-    commit_log: bool = True,
 ) -> StreamingQuery:
     """T4 for NEAR-duplicates: a cross-batch MinHash-LSH gate over a
     persistent signature store. Each micro-batch of (doc_id, text) is
@@ -720,11 +589,12 @@ def incremental_lsh_dedup(
 
     Idempotent replay (the incremental_rollup layout): the batch writes
     only its own ``sig_path/batch_id=<id>/`` and
-    ``audit_path/batch_id=<id>/`` with directory overwrite, and the
-    store probe EXCLUDES the current batch_id — so an at-least-once
-    replay after a crash between sink write and checkpoint commit
-    re-derives the same novelty verdicts (its own half-written
-    signatures cannot flag it as a duplicate of itself).
+    ``audit_path/batch_id=<id>/`` with directory overwrite, commits
+    both through the manifest log, and the store probe EXCLUDES the
+    current batch_id — so an at-least-once replay after a crash
+    between sink write and checkpoint commit re-derives the same
+    novelty verdicts (its own earlier signatures cannot flag it as a
+    duplicate of itself).
 
     Within-batch near-dups intentionally both land in the store: intra-
     batch resolution is the batch operator's job (lsh_near_dup_pairs →
@@ -749,7 +619,7 @@ def incremental_lsh_dedup(
             batch, "doc_id", "text", shingle_n, num_hashes, bands
         ).persist()
         try:
-            prior = _gate_store(batch, sig_path, batch_id, commit_log)
+            prior = _gate_store(batch, sig_path, batch_id)
             if prior is not None:
                 dup_ids = (
                     sig.join(prior, ["band_idx", "band_hash"], "left_semi")
@@ -759,9 +629,6 @@ def incremental_lsh_dedup(
             else:
                 dup_ids = sig.select("doc_id").limit(0)
             novel = sig.join(dup_ids, "doc_id", "left_anti")
-            novel.select("doc_id", "band_idx", "band_hash").write.mode(
-                "overwrite"
-            ).parquet(f"{sig_path.rstrip('/')}/batch_id={batch_id}")
             ids = batch.select("doc_id").distinct()
             flagged = ids.join(
                 dup_ids.withColumn("_d", F.lit(1)), "doc_id", "left"
@@ -772,16 +639,11 @@ def incremental_lsh_dedup(
                     "n_dup_candidates"
                 ),
             )
-            audit.write.mode("overwrite").parquet(
-                f"{audit_path.rstrip('/')}/batch_id={batch_id}"
+            commitlog.write_partials(
+                batch_id,
+                (novel.select("doc_id", "band_idx", "band_hash"), sig_path),
+                (audit, audit_path),
             )
-            if commit_log:
-                from nashville_etl_service_backup_spark.streaming import (
-                    commitlog,
-                )
-
-                commitlog.commit(sig_path, add=[f"batch_id={batch_id}"])
-                commitlog.commit(audit_path, add=[f"batch_id={batch_id}"])
         finally:
             sig.unpersist()
 
@@ -796,17 +658,9 @@ def incremental_lsh_dedup(
     )
 
 
-def read_dedup_audit(
-    spark: SparkSession, audit_path: str, commit_log: bool = True
-) -> DataFrame:
-    """Per-batch novelty audit, one row per processed micro-batch.
-    ``commit_log=True`` reads only manifest-committed batches."""
-    if commit_log:
-        from nashville_etl_service_backup_spark.streaming import commitlog
-
-        src = commitlog.read_committed(spark, audit_path)
-    else:
-        src = spark.read.option("basePath", audit_path).parquet(audit_path)
+def read_dedup_audit(spark: SparkSession, audit_path: str) -> DataFrame:
+    """Per-batch novelty audit, one row per committed micro-batch."""
+    src = commitlog.read_committed(spark, audit_path)
     return src.select("batch_id", "n_docs", "n_dup_candidates").orderBy(
         "batch_id"
     )
@@ -821,7 +675,6 @@ def incremental_bloom_gate(
     key_col: str = "doc_id",
     k: int = 4,
     m: int = 4096,
-    commit_log: bool = True,
 ) -> StreamingQuery:
     """T4's bounded-memory variant: a cross-batch EXACT-KEY novelty
     gate backed by a persistent Bloom filter (operators/sketch.py math)
@@ -853,7 +706,7 @@ def incremental_bloom_gate(
                     F.array(*[_bucket(key, i, m) for i in range(k)])
                 ).alias("pos"),
             )
-            store = _gate_store(batch, bloom_path, batch_id, commit_log)
+            store = _gate_store(batch, bloom_path, batch_id)
             if store is not None:
                 prior = (
                     store.select("pos")
@@ -874,9 +727,6 @@ def incremental_bloom_gate(
                 .select("pos")
                 .distinct()
             )
-            novel_pos.write.mode("overwrite").parquet(
-                f"{bloom_path.rstrip('/')}/batch_id={batch_id}"
-            )
             flagged = keys.join(
                 seen.withColumn("_d", F.lit(1)), key_col, "left"
             )
@@ -884,16 +734,9 @@ def incremental_bloom_gate(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.sum(F.coalesce(F.col("_d"), F.lit(0))).alias("n_flagged"),
             )
-            audit.write.mode("overwrite").parquet(
-                f"{audit_path.rstrip('/')}/batch_id={batch_id}"
+            commitlog.write_partials(
+                batch_id, (novel_pos, bloom_path), (audit, audit_path)
             )
-            if commit_log:
-                from nashville_etl_service_backup_spark.streaming import (
-                    commitlog,
-                )
-
-                commitlog.commit(bloom_path, add=[f"batch_id={batch_id}"])
-                commitlog.commit(audit_path, add=[f"batch_id={batch_id}"])
         finally:
             keys.unpersist()
 
@@ -908,17 +751,9 @@ def incremental_bloom_gate(
     )
 
 
-def read_bloom_audit(
-    spark: SparkSession, audit_path: str, commit_log: bool = True
-) -> DataFrame:
-    """Per-batch Bloom-gate audit, one row per processed micro-batch.
-    ``commit_log=True`` reads only manifest-committed batches."""
-    if commit_log:
-        from nashville_etl_service_backup_spark.streaming import commitlog
-
-        src = commitlog.read_committed(spark, audit_path)
-    else:
-        src = spark.read.option("basePath", audit_path).parquet(audit_path)
+def read_bloom_audit(spark: SparkSession, audit_path: str) -> DataFrame:
+    """Per-batch Bloom-gate audit, one row per committed micro-batch."""
+    src = commitlog.read_committed(spark, audit_path)
     return src.select("batch_id", "n_docs", "n_flagged").orderBy(
         "batch_id"
     )

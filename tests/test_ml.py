@@ -629,10 +629,10 @@ def test_score_drift_psi_detects_shift(spark):
     assert shifted > 0.2
 
 
-def test_lazy_chain_matches_collect_per_round_reference(spark):
-    """The lazily chained GD rounds must stay bit-identical to the
-    collect-per-round formulation they replaced (weights collected and
-    re-embedded as float literals after every round)."""
+def test_logreg_matches_column_built_reference(spark):
+    """logreg_train's SQL-string rounds must stay bit-identical to an
+    independently Column-built collect-per-round GD (weights collected
+    and re-embedded as float literals after every round)."""
     from nashville_etl_service_backup_spark.operators.ml import (
         GRAD_SCALE,
         W_SCALE,
@@ -674,21 +674,9 @@ def test_lazy_chain_matches_collect_per_round_reference(spark):
     assert logreg_train(feats, fcols, "y", iterations=8, lr=4.0) == reference()
 
 
-def test_logreg_lazy_eager_paths_identical(spark):
-    """logreg_train's lazy chain and collect-per-round (lazy=False)
-    paths must return the same weights bit-for-bit — consumers pick a
-    path purely on measured plan overhead, never on values."""
-    feats = standardize(_toy(spark), ["x1", "x2"])
-    lazy = logreg_train(feats, ["x1", "x2"], "y", iterations=8, lr=4.0)
-    eager = logreg_train(
-        feats, ["x1", "x2"], "y", iterations=8, lr=4.0, lazy=False
-    )
-    assert lazy == eager
-
-
-def test_folds_lazy_eager_paths_identical(spark):
-    """logreg_train_folds' lazy chain and collect-per-round (lazy=False)
-    paths must return identical weights and counts bit-for-bit."""
+def test_folds_match_per_subset_training(spark):
+    """Fold-parallel GD: model i's weights and train count equal
+    logreg_train on the rows with fold != i, bit-for-bit."""
     from nashville_etl_service_backup_spark.operators.ml import (
         logreg_train_folds,
     )
@@ -696,29 +684,19 @@ def test_folds_lazy_eager_paths_identical(spark):
     feats = standardize(_toy(spark), ["x1", "x2"]).withColumn(
         "_fold", (F.col("id") % 3).cast("int")
     )
-    a = logreg_train_folds(feats, ["x1", "x2"], "y", "_fold", 3, 4, 4.0)
-    b = logreg_train_folds(
-        feats, ["x1", "x2"], "y", "_fold", 3, 4, 4.0, lazy=False
-    )
-    assert a == b
+    ws, ns = logreg_train_folds(feats, ["x1", "x2"], "y", "_fold", 3, 4, 4.0)
+    subsets = [feats.filter(F.col("_fold") != i) for i in range(3)]
+    assert ws == [
+        logreg_train(sub, ["x1", "x2"], "y", iterations=4, lr=4.0)
+        for sub in subsets
+    ]
+    assert ns == [sub.count() for sub in subsets]
 
 
-def test_logreg_chain_depths_identical(spark):
-    """chain_depth (rounds lazily chained per submitted action) is a
-    pure plan-shape knob: every depth — including one that doesn't
-    divide `iterations` — returns bit-identical weights."""
-    feats = standardize(_toy(spark), ["x1", "x2"])
-    ref = logreg_train(feats, ["x1", "x2"], "y", iterations=8, lr=4.0)
-    for depth in (1, 2, 3, 4):
-        got = logreg_train(
-            feats, ["x1", "x2"], "y", iterations=8, lr=4.0,
-            chain_depth=depth,
-        )
-        assert got == ref, depth
-
-
-def test_folds_chain_depths_identical(spark):
-    """Fold-parallel GD: chain_depth never changes weights or counts."""
+def test_gd_trains_on_backtick_column_names(spark):
+    """Column names are quoted in the generated SQL: a feature, label
+    or fold column containing a backtick trains exactly like a plain
+    name."""
     from nashville_etl_service_backup_spark.operators.ml import (
         logreg_train_folds,
     )
@@ -726,13 +704,18 @@ def test_folds_chain_depths_identical(spark):
     feats = standardize(_toy(spark), ["x1", "x2"]).withColumn(
         "_fold", (F.col("id") % 3).cast("int")
     )
-    ref = logreg_train_folds(feats, ["x1", "x2"], "y", "_fold", 3, 4, 4.0)
-    for depth in (2, 3):
-        got = logreg_train_folds(
-            feats, ["x1", "x2"], "y", "_fold", 3, 4, 4.0,
-            chain_depth=depth,
-        )
-        assert got == ref, depth
+    ticked = feats.select(
+        F.col("x1").alias("x`1"),
+        "x2",
+        F.col("y").alias("y`"),
+        F.col("_fold").alias("`f"),
+    )
+    assert logreg_train(
+        ticked, ["x`1", "x2"], "y`", iterations=4, lr=4.0
+    ) == logreg_train(feats, ["x1", "x2"], "y", iterations=4, lr=4.0)
+    assert logreg_train_folds(
+        ticked, ["x`1", "x2"], "y`", "`f", 3, 4, 4.0
+    ) == logreg_train_folds(feats, ["x1", "x2"], "y", "_fold", 3, 4, 4.0)
 
 
 def test_gd_reserved_name_collision_raises(spark):

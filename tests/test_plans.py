@@ -251,18 +251,21 @@ def test_boilerplate_strip_is_anti_join(spark):
     assert "LeftAnti" in plan
 
 
-def _filters_above_round_robin(plan: str) -> tuple[int, int]:
-    """(Filters with a round-robin Exchange below them, Filters below
-    one) in an explain tree."""
+def _around_round_robin(
+    plan: str, node: str = "Filter"
+) -> tuple[int, int]:
+    """(``node``s with a round-robin Exchange below them, ``node``s
+    below one) in an explain tree."""
     # tree lines only: a condition's string literals can break lines
     lines = [ln for ln in plan.splitlines() if re.match(r"[ :]*[+:]- \S", ln)]
 
     def depth(ln: str) -> int:
         return len(ln) - len(ln.lstrip(" :+-"))
 
+    head = re.compile(rf"[ :]*[+:]- {node}\b")
     above = below = 0
     for i, ln in enumerate(lines):
-        if not re.match(r"[ :]*[+:]- Filter\b", ln):
+        if not head.match(ln):
             continue
         sub = []
         for nxt in lines[i + 1 :]:
@@ -277,7 +280,7 @@ def _filters_above_round_robin(plan: str) -> tuple[int, int]:
         for nxt in lines[i + 1 :]:
             if depth(nxt) <= depth(ln):
                 break
-            below += bool(re.match(r"[ :]*[+:]- Filter\b", nxt))
+            below += bool(head.match(nxt))
     return above, below
 
 
@@ -297,26 +300,28 @@ def test_curation_funnel_runs_in_jvm(spark, name):
 def test_funnel_filters_stay_above_spread(spark):
     """The funnel's Filters sit above spread()'s round-robin Exchange (a
     CollectMetrics node stops Catalyst from pushing them into the
-    scan's single task), and text_filter_funnel keeps its two halves
-    as a Union."""
+    scan's single task), and text_filter_funnel tallies its one verdict
+    column with no Union."""
     from nashville_etl_service_backup_spark.operators import spread
-    from nashville_etl_service_backup_spark.queries.llmdata import _funnel_split
+    from nashville_etl_service_backup_spark.queries.llmdata import (
+        _funnel_verdicts,
+    )
     from nashville_etl_service_backup_spark.tables import load
 
     def simple(df) -> str:
         return df._jdf.queryExecution().executedPlan().toString()
 
     docs = spread(load(spark, SF, "documents"))
-    _, survivors = _funnel_split(docs, keep_cols=("doc_id", "lang"))
-    kept = survivors.filter("late_verdict = 'kept'").select("doc_id", "text")
+    verdicts = _funnel_verdicts(docs, keep_cols=("doc_id", "lang"))
+    kept = verdicts.filter("verdict = 'kept'").select("doc_id", "text")
     assert "EvalPython" not in simple(kept)
-    above, below = _filters_above_round_robin(simple(kept))
+    above, below = _around_round_robin(simple(kept))
     assert (above, below) == (1, 0)
 
-    funnel = extended_queries()["text_filter_funnel"](spark, SF)
-    above, below = _filters_above_round_robin(simple(funnel))
-    assert (above, below) == (2, 0)
-    assert "Union" in simple(funnel)
+    funnel = simple(extended_queries()["text_filter_funnel"](spark, SF))
+    assert "Union" not in funnel
+    assert _around_round_robin(funnel)[1] == 0
+    assert _around_round_robin(funnel, "CollectMetrics") == (1, 0)
 
 
 def test_dup_spans_hashed_equi_join_no_text_shuffle(spark):

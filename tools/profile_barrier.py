@@ -72,8 +72,8 @@ def build_feats(spark, sf_dir):
 
 
 def decomposed_rounds(feats, fcols, label_col, iterations=8, lr=4.0):
-    """Replay logreg_train's collect-per-round formulation with the
-    three phases timed separately. Weight math identical to ml.py."""
+    """Replay logreg_train's rounds, Column-built, with the three
+    phases timed separately. Weight math identical to ml.py."""
     d = len(fcols)
     w = [0.0] * (d + 1)
     out = []
@@ -149,26 +149,22 @@ def main() -> None:
         res[key] = rounds
     res["final_weights"] = w
 
-    # end-to-end logreg_train at both chain depths (min of 3)
-    for name, kw in [
-        ("train_depth1_sec", {"lazy": False}),
-        ("train_depth8_sec", {"lazy": True}),
-    ]:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            logreg_train(feats, fcols, "y", iterations=8, lr=4.0, **kw)
-            best = min(best, time.perf_counter() - t0)
-        res[name] = round(best, 3)
+    # end-to-end logreg_train (min of 3)
+    best = float("inf")
+    for _ in range(3):
+        t0 = time.perf_counter()
+        logreg_train(feats, fcols, "y", iterations=8, lr=4.0)
+        best = min(best, time.perf_counter() - t0)
+    res["train_sec"] = round(best, 3)
 
-    # AQE off A/B on the collect-per-round path
+    # AQE off A/B
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     best = float("inf")
     for _ in range(3):
         t0 = time.perf_counter()
-        w_noaqe = logreg_train(feats, fcols, "y", iterations=8, lr=4.0, lazy=False)
+        w_noaqe = logreg_train(feats, fcols, "y", iterations=8, lr=4.0)
         best = min(best, time.perf_counter() - t0)
-    res["train_depth1_noaqe_sec"] = round(best, 3)
+    res["train_noaqe_sec"] = round(best, 3)
     res["noaqe_weights_identical"] = w_noaqe == w
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
