@@ -4,9 +4,9 @@ Reference nashville_arcgis.py:16-20,139-167:
 - ring centroid: mean of xs / mean of ys over the first polygon ring —
   expressed with `aggregate` higher-order functions over ArrayType (no UDF).
 - coordinate range validation lat∈[35,37], lng∈[-88,-85].
-- EPSG:2274 (TN state-plane, ft) → EPSG:4326 transform: pyproj behind a
-  pandas UDF when available, else a documented affine approximation valid
-  over the Nashville extent.
+- EPSG:2274 (TN state-plane, ft) → EPSG:4326 transform: a documented
+  affine approximation valid over the Nashville extent (the closed-form
+  alternative SURVEY D2 lists to a pyproj UDF).
 """
 
 from __future__ import annotations
@@ -47,8 +47,7 @@ def validate_coords(lat: Column, lng: Column) -> tuple[Column, Column]:
 
 # EPSG:2274 (NAD83 / Tennessee ft) → EPSG:4326, affine approximation around
 # the Nashville extent (x≈1.7e6 ft, y≈6.6e5 ft). Accurate to ~1e-3 deg over
-# the county — adequate for the reference's [35,37]×[-88,-85] gate. The
-# pyproj pandas-UDF path (D2) is preferred when pyproj is importable.
+# the county — adequate for the reference's [35,37]×[-88,-85] gate.
 _X0, _Y0 = 1738000.0, 665000.0
 _LAT0, _LNG0 = 36.1627, -86.7816
 _DLAT_DY = 1.0 / 364000.0  # deg lat per survey-foot
@@ -59,25 +58,3 @@ def state_plane_to_wgs84_approx(x: Column, y: Column) -> tuple[Column, Column]:
     lat = F.lit(_LAT0) + (y - F.lit(_Y0)) * F.lit(_DLAT_DY)
     lng = F.lit(_LNG0) + (x - F.lit(_X0)) * F.lit(_DLNG_DX)
     return lat, lng
-
-
-def state_plane_to_wgs84_udf():
-    """D2: vectorized pyproj transform (nashville_arcgis.py:158-167).
-    Raises ImportError when pyproj is absent — callers fall back to the
-    affine approximation."""
-    import pyproj  # noqa: F401  (gated import)
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StructType, StructField, DoubleType
-
-    out_t = StructType(
-        [StructField("lat", DoubleType()), StructField("lng", DoubleType())]
-    )
-
-    @pandas_udf(out_t)
-    def _xf(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        tr = pyproj.Transformer.from_crs("EPSG:2274", "EPSG:4326", always_xy=True)
-        lng, lat = tr.transform(x.values, y.values)
-        return pd.DataFrame({"lat": lat, "lng": lng})
-
-    return _xf

@@ -56,11 +56,6 @@ def text_match(tokens: Column, query: Column) -> Column:
     return F.size(F.array_intersect(tokens, query)) == F.size(query)
 
 
-def text_match_any(tokens: Column, query: Column) -> Column:
-    """OR-semantics variant (websearch 'or' analog)."""
-    return F.arrays_overlap(tokens, query)
-
-
 def text_rank(tokens: Column, query: Column) -> Column:
     """F15 rank — |intersection| / |tokens| (documented divergence from
     Postgres ts_rank weighting; encoded identically in the oracle SQL)."""

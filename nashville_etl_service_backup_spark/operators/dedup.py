@@ -21,6 +21,8 @@ signature), and uniform enough for banding.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -61,20 +63,6 @@ def minhash_signature(shingle_set: Column, num_hashes: int = 4) -> list[Column]:
     return [minhash(shingle_set, k) for k in range(num_hashes)]
 
 
-def minhash_signature_sliced(shingle_set: Column, num_hashes: int = 4) -> list[Column]:
-    """MinHash signature from ONE md5 per shingle: non-overlapping
-    8-hex-char slices of the digest are independent uniform 32-bit
-    hashes. 4× cheaper than seeded re-hashing; md5's 32 hex chars cap
-    num_hashes at 4."""
-    if num_hashes > 4:
-        raise ValueError("sliced signature supports at most 4 hashes")
-    hashed = F.transform(shingle_set, lambda t: F.md5(t))
-    return [
-        F.array_min(F.transform(hashed, lambda h: F.substring(h, 1 + 8 * k, 8)))
-        for k in range(num_hashes)
-    ]
-
-
 def exact_dedup_groups(
     df: DataFrame, id_col: str, fingerprint: Column
 ) -> DataFrame:
@@ -104,6 +92,123 @@ def exact_dedup(df: DataFrame, id_col: str, fingerprint: Column) -> DataFrame:
     )
 
 
+def _minhash_bands(
+    frame: DataFrame,
+    set_col: str,
+    salts: list[str],
+    per_digest: int,
+    width: int,
+    bands: int,
+) -> DataFrame:
+    """``frame`` plus ``bands``: the banded MinHash keys of the string
+    set ``set_col``, folded digest first.
+
+    Each element is hashed once per salt (md5 of salt + element; the
+    empty salt hashes the element itself), and each digest's first
+    ``per_digest`` slices of ``width`` hex chars are independent
+    uniform hashes: one aggregate per salt folds them into running mins
+    ('~' sorts above hex), giving len(salts)·per_digest MinHash slots.
+    Hashing inside the slot lambda would hash each element once per
+    slot, and a per-slot array_min(transform(md5)) column set re-derives
+    the md5 pipeline per column. Band b joins slots b·r .. b·r + r − 1
+    with '|', r = slots div ``bands``. An empty set has NULL bands, so
+    it is never a candidate (its keys would be the '~' sentinels, equal
+    for every empty set, and its Jaccard 0/0)."""
+    if per_digest * width > 32:
+        raise ValueError(
+            f"{per_digest} slices of {width} hex chars exceed an md5 digest"
+        )
+    rows_per_band = len(salts) * per_digest // bands
+    pos = F.array(*[F.lit(k * width + 1) for k in range(per_digest)])
+
+    def salt_mins(salt: str) -> Column:
+        digests = F.transform(
+            F.col(set_col),
+            lambda t: F.md5(F.concat(F.lit(salt), t)) if salt else F.md5(t),
+        )
+        return F.aggregate(
+            digests,
+            F.array_repeat(F.lit("~"), per_digest),
+            lambda acc, h: F.zip_with(
+                acc, pos, lambda a, p: F.least(a, F.substring(h, p, width))
+            ),
+        )
+
+    mins = F.concat(*[salt_mins(s) for s in salts])
+    keys = [
+        F.concat_ws(
+            "|",
+            *[
+                F.element_at(F.col("_mins"), b * rows_per_band + j + 1)
+                for j in range(rows_per_band)
+            ],
+        )
+        for b in range(bands)
+    ]
+    # the mins are staged in their own projection: each band key reads
+    # them, and an inlined fold would run once per key
+    return (
+        frame.withColumn("_mins", mins)
+        .withColumn("bands", F.when(F.size(set_col) > 0, F.array(*keys)))
+        .drop("_mins")
+    )
+
+
+def _band_pairs(frame: DataFrame, keys: str | Column) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b), doc_a < doc_b, of the docs in
+    ``frame`` whose key arrays hold an equal key at the same index: the
+    ``keys`` arrays (a column of ``frame`` or an expression over it) are
+    posexploded and equi-joined on (band_idx, key), so at scale only
+    (band_idx, key, doc_id) rows shuffle, never the corpus cross
+    product. A NULL key array has no keys. ``doc_id`` may be any
+    orderable value, e.g. a struct (id, payload) that carries a payload
+    through the join.
+
+    Pass an expression, not a staged column, when ``frame`` is not
+    materialized: for an exploded column Spark infers size(keys) > 0
+    and pushes it below the projection that computes the column, which
+    then runs twice."""
+    b = frame.select("doc_id", F.posexplode(keys).alias("band_idx", "key"))
+    l, r = b.alias("l"), b.alias("r")
+    return (
+        l.join(
+            r,
+            (F.col("l.band_idx") == F.col("r.band_idx"))
+            & (F.col("l.key") == F.col("r.key"))
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        )
+        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def _pair_sides(cand: DataFrame, base: DataFrame, col: str) -> DataFrame:
+    """The candidate pairs (doc_a, doc_b) with each side's ``col`` from
+    ``base`` (doc_id, ``col``) joined on, as ``{col}_a`` and
+    ``{col}_b``: the verify joins fetch payloads for the candidates
+    only."""
+    side_a = base.select(F.col("doc_id").alias("doc_a"), F.col(col).alias(f"{col}_a"))
+    side_b = base.select(F.col("doc_id").alias("doc_b"), F.col(col).alias(f"{col}_b"))
+    return cand.join(side_a, "doc_a").join(side_b, "doc_b")
+
+
+def _jaccard_pairs(
+    cand: DataFrame,
+    base: DataFrame,
+    set_col: str,
+    keep: Callable[[Column, Column], Column],
+) -> DataFrame:
+    """Exact set verify of candidate pairs: (doc_a, doc_b, jaccard) for
+    the pairs whose ``set_col`` sets satisfy keep(|a ∩ b|, |a ∪ b|),
+    jaccard rounded to 6 places."""
+    sides = _pair_sides(cand, base, set_col)
+    i = F.size(F.array_intersect(f"{set_col}_a", f"{set_col}_b"))
+    u = F.size(F.array_union(f"{set_col}_a", f"{set_col}_b"))
+    return sides.filter(keep(i, u)).select(
+        "doc_a", "doc_b", F.round(i.cast("double") / u, 6).alias("jaccard")
+    )
+
+
 def _signature_frame(
     df: DataFrame,
     id_col: str,
@@ -113,10 +218,10 @@ def _signature_frame(
     bands: int,
 ) -> DataFrame:
     """(doc_id, sh, bands) frame shared by the batch pair-finder and the
-    streaming signature store: shingle sets plus the banded md5-slice
-    MinHash band-hash array (NULL bands for shingle-less docs). Callers
+    streaming signature store: shingle sets plus the banded MinHash
+    band-hash array, num_hashes 8-hex-char slices of one md5 per
+    shingle (NULL bands for shingle-less docs). Callers
     persist/materialize as their access pattern requires."""
-    rows_per_band = num_hashes // bands
     toks = tokenize(F.col("_txt"))
     sh = shingles(toks, shingle_n)
     # Spread the RAW text before any per-token work (tokenize, shingle,
@@ -127,34 +232,7 @@ def _signature_frame(
     shingled = spread(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_txt"))
     ).select("doc_id", sh.alias("sh"))
-    # All num_hashes minhash slices in ONE aggregate fold (running mins):
-    # a per-hash array_min(transform(md5)) column set re-derives the
-    # md5 pipeline per column (CollapseProject inlines the shared
-    # subexpression), measured ~4× slower than this single pass.
-    init = F.array_repeat(F.lit("~"), num_hashes)  # '~' sorts above hex
-    ks = F.array(*[F.lit(k) for k in range(num_hashes)])
-    mins = F.aggregate(
-        F.col("sh"),
-        init,
-        lambda acc, t: F.zip_with(
-            acc, ks, lambda a, k: F.least(a, F.substring(F.md5(t), k * 8 + 1, 8))
-        ),
-    )
-    band_cols = [
-        F.concat_ws(
-            "|",
-            *[
-                F.element_at(F.col("_mins"), b * rows_per_band + j + 1)
-                for j in range(rows_per_band)
-            ],
-        )
-        for b in range(bands)
-    ]
-    return shingled.withColumn("_mins", mins).select(
-        "doc_id",
-        "sh",
-        F.when(F.size("sh") > 0, F.array(*band_cols)).alias("bands"),
-    )
+    return _minhash_bands(shingled, "sh", [""], num_hashes, 8, bands)
 
 
 def band_signatures(
@@ -205,37 +283,12 @@ def lsh_near_dup_pairs(
             df, id_col, text_col, shingle_n, num_hashes, bands
         ).localCheckpoint(eager=False)
     )
-    # candidate generation: explode bands, equi-join on (band_idx, hash)
-    b = base.select(
-        "doc_id", F.posexplode("bands").alias("band_idx", "band_hash")
+    return _jaccard_pairs(
+        _band_pairs(base, "bands"),
+        base,
+        "sh",
+        lambda i, u: i.cast("double") / u >= threshold,
     )
-    left = b.alias("l")
-    right = b.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # verification: fetch both shingle sets, exact Jaccard
-    sa = base.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = base.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    verified = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return verified
 
 
 def char_ngrams(text: Column, n: int = 3) -> Column:
@@ -270,7 +323,7 @@ def ngram_jaccard_pairs(
     threshold: float = 0.7,
 ) -> DataFrame:
     """Character-n-gram Jaccard near-duplicates via banded MinHash
-    blocking: band key = concat of ``hashes_per_band`` seeded min-md5s
+    blocking: band key = concat of ``hashes_per_band`` MinHash slots
     over the n-gram set (per-band collision probability J^r,
     OR-amplified over ``bands``), then exact Jaccard ≥ threshold on the
     candidate set. Band width r matters at scale: on a
@@ -279,92 +332,28 @@ def ngram_jaccard_pairs(
     by most docs → O(B²) candidates); r=5 keeps every block tiny
     (measured 1.5k candidates / 5k docs) while recall at J≥0.9 stays
     ≈ 1-(1-J⁵)^bands ≈ 0.93. Candidate generation is an equi-join on
-    (band_idx, band_key) — never the corpus cross product."""
-    from nashville_etl_service_backup_spark.operators import spread
+    (band_idx, band_key) — never the corpus cross product. A doc with
+    no n-grams (text shorter than n, or NULL) never pairs."""
+    from nashville_etl_service_backup_spark.operators import spread, track_persist
 
     # spread the RAW text before any per-char work: the ngram/md5 stages
     # are the CPU cost and must run on all cores even when the scan has
-    # a single input split
-    grams = char_ngrams(F.col("_txt"), n)
-    # All band-key minhashes from ONE md5 per (gram, band): the digest's
-    # 32 hex chars yield hashes_per_band (≤5) independent 6-hex-char
-    # slices, folded into running mins in a single aggregate pass —
-    # bands·r seeded re-hashes (15 md5/gram) drop to `bands` (3), the
-    # same slicing trick as minhash_signature_sliced.
-    if hashes_per_band > 5:
-        raise ValueError("sliced band keys support at most 5 hashes per band")
-    hpb = hashes_per_band
-    per_gram = F.transform(
-        F.col("g"),
-        lambda t: F.array(
-            *[F.md5(F.concat(F.lit(f"{b}:"), t)) for b in range(bands)]
-        ),
-    )
-    init = F.array_repeat(F.lit("~"), bands * hpb)
-    idx = F.array(*[F.lit(i) for i in range(bands * hpb)])
-    mins = F.aggregate(
-        per_gram,
-        init,
-        lambda acc, x: F.zip_with(
-            acc,
-            idx,
-            lambda a, i: F.least(
-                a,
-                F.substring(
-                    F.element_at(x, (i / hpb).cast("int") + 1),
-                    (i % hpb) * 6 + 1,
-                    F.lit(6),
-                ),
-            ),
-        ),
-    )
-    from nashville_etl_service_backup_spark.operators import track_persist
-
+    # a single input split. One md5 per (gram, band): the digest's 32
+    # hex chars yield hashes_per_band (≤5) independent 6-hex-char
+    # slices, so bands·r seeded re-hashes (15 md5/gram) drop to `bands`.
+    grams = spread(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_txt"))
+    ).select("doc_id", char_ngrams(F.col("_txt"), n).alias("g"))
     base = track_persist(
-        spread(df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_txt")))
-        .select("doc_id", grams.alias("g"))
-        .withColumn("_mins", mins)
-        .withColumn(
-            "bk",
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.element_at(F.col("_mins"), b * hpb + k + 1)
-                            for k in range(hpb)
-                        ],
-                    )
-                    for b in range(bands)
-                ]
-            ),
+        _minhash_bands(
+            grams, "g", [f"{b}:" for b in range(bands)], hashes_per_band, 6, bands
         )
-        .drop("_mins")
     )
-    bx = base.select("doc_id", F.posexplode("bk").alias("band_idx", "band_key"))
-    l, r = bx.alias("l"), bx.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    ga = base.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("ga"))
-    gb = base.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("gb"))
-    return (
-        cand.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("ga", "gb")).cast("double")
-            / F.size(F.array_union("ga", "gb")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    return _jaccard_pairs(
+        _band_pairs(base, "bands"),
+        base,
+        "g",
+        lambda i, u: i.cast("double") / u >= threshold,
     )
 
 
@@ -425,43 +414,33 @@ def simhash_pairs_from_sigs(
     Shared by the text SimHash path and the multimodal perceptual-hash
     path (operators/multimodal.py) — the blocking algebra is identical
     whatever produced the 64 bits."""
-    chunks = base.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.array(*[F.substring("sig", 1 + 16 * i, 16) for i in range(4)])
-        ).alias("chunk_idx", "chunk"),
+    # each doc's signature rides through the chunk join inside its
+    # (doc_id, sig) key, so no verify join fetches it back: ids are
+    # unique, so the struct order is the doc_id order once NULL ids
+    # (which never pair) are dropped
+    keyed = base.filter(F.col("doc_id").isNotNull()).select(
+        F.struct("doc_id", "sig").alias("doc_id"), "sig"
     )
-    l, r = chunks.alias("l"), chunks.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.chunk_idx") == F.col("r.chunk_idx"))
-            & (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.col("l.sig").alias("sig_a"),
-            F.col("r.sig").alias("sig_b"),
-        )
-        .distinct()
-    )
+    chunks = F.array(*[F.substring("sig", 1 + 16 * i, 16) for i in range(4)])
     hamming = F.size(
         F.filter(
             F.zip_with(
-                F.split("sig_a", ""),
-                F.split("sig_b", ""),
+                F.split(F.col("doc_a.sig"), ""),
+                F.split(F.col("doc_b.sig"), ""),
                 lambda a, b: a != b,
             ),
             lambda x: x,
         )
     )
     return (
-        cand.withColumn("hamming", hamming.cast("long"))
+        _band_pairs(keyed, chunks)
+        .withColumn("hamming", hamming.cast("long"))
         .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+        .select(
+            F.col("doc_a.doc_id").alias("doc_a"),
+            F.col("doc_b.doc_id").alias("doc_b"),
+            "hamming",
+        )
     )
 
 
@@ -741,17 +720,4 @@ def prefix_filter_jaccard_pairs(
         )
         .distinct()
     )
-    ta = base.select(F.col("doc_id").alias("doc_a"), F.col("tk").alias("ta"))
-    tb = base.select(F.col("doc_id").alias("doc_b"), F.col("tk").alias("tb"))
-    i = F.size(F.array_intersect("ta", "tb"))
-    u = F.size(F.array_union("ta", "tb"))
-    return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .filter(i * t_den >= u * t_num)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(i.cast("double") / u, 6).alias("jaccard"),
-        )
-    )
+    return _jaccard_pairs(cand, base, "tk", lambda i, u: i * t_den >= u * t_num)

@@ -34,16 +34,6 @@ def default_block_key(name: Column) -> Column:
     return F.lower(F.split(name, " ")[0])
 
 
-def two_token_block_key(name: Column) -> Column:
-    """First TWO tokens, lowercased — a tighter block for names of ≥3
-    tokens whose leading-token vocabulary is small. Suffix typos in the
-    LAST token never escape it."""
-    toks = F.split(name, " ")
-    return F.lower(
-        F.concat_ws(" ", toks[0], F.coalesce(toks[1], F.lit("")))
-    )
-
-
 def fuzzy_link_distinct_names(
     probe: DataFrame,
     catalog: DataFrame,

@@ -170,15 +170,15 @@ class _adaptive_off:
         return False
 
 
-def _check_reserved(cols: list[str], reserved: set[str]) -> None:
-    """The GD rounds stage internal columns (residuals, counts,
-    gradient sums, weights) next to the caller's feature/label/fold
-    columns; a user column with one of those names could shadow a
-    staged value. Fail loudly instead."""
-    hit = sorted(set(cols) & reserved)
+def _check_reserved(feature_cols: list[str], reserved: set[str]) -> None:
+    """The GD round's staged projection holds the feature columns next
+    to internal ones (the residuals, the fold id); a feature with one of
+    those names is an ambiguous reference there. Fail loudly instead.
+    No other input column reaches the projection."""
+    hit = sorted(set(feature_cols) & reserved)
     if hit:
         raise ValueError(
-            "input columns collide with GD-internal staging names: "
+            "feature columns collide with GD-internal staging names: "
             f"{hit} — rename them before training"
         )
 
@@ -212,13 +212,7 @@ def logreg_train(
     Caller should persist `feats` when the feature projection is
     expensive (each round re-scans it)."""
     d = len(feature_cols)
-    reserved = {"_r", "n"}
-    reserved.update(f"_w{j}" for j in range(d + 1))
-    reserved.update(f"g{j}" for j in range(d + 1))
-    _check_reserved(
-        [c for c in feats.columns if c != label_col and c not in feature_cols],
-        reserved,
-    )
+    _check_reserved(feature_cols, {"_r"})
     cols = [_ident(c) for c in feature_cols]
     w = [0.0] * (d + 1)
     with _adaptive_off(feats):
@@ -280,21 +274,7 @@ def logreg_train_folds(
     Returns (k weight vectors, k train-row counts).
     Caller should persist `folds`."""
     d = len(feature_cols)
-    reserved = {"_fold_g"}
-    for i in range(k):
-        reserved.add(f"_r{i}")
-        reserved.add(f"n_{i}")
-        reserved.add(f"_n_{i}")
-        reserved.update(f"_w{i}_{j}" for j in range(d + 1))
-        reserved.update(f"g{i}_{j}" for j in range(d + 1))
-    _check_reserved(
-        [
-            c
-            for c in folds.columns
-            if c not in (label_col, fold_col) and c not in feature_cols
-        ],
-        reserved,
-    )
+    _check_reserved(feature_cols, {"_fold_g", *(f"_r{i}" for i in range(k))})
     cols = [_ident(c) for c in feature_cols]
     ws = [[0.0] * (d + 1) for _ in range(k)]
     ns = [0] * k
@@ -514,7 +494,7 @@ def classifier_eval_oracle_sql(
                       AS DECIMAL(38,12))) AS DOUBLE)
         /CAST(COUNT(*) AS DOUBLE), 6) AS brier
   FROM {scored_cte})"""
-    final = f"""SELECT np AS n_pos, nn AS n_neg, acc,
+    final = f"""SELECT CAST(np AS BIGINT) AS n_pos, CAST(nn AS BIGINT) AS n_neg, acc,
   ROUND(CAST(s2 AS DOUBLE)/(2.0*np*nn), 6) AS auc, brier
 FROM {prefix}tot, {prefix}met"""
     if as_cte:

@@ -30,11 +30,6 @@ from nashville_etl_service_backup_spark.functions.text import (
 from nashville_etl_service_backup_spark.operators.pagination import PER_PAGE, paginate
 
 
-def with_search_tokens(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Materialize the search_vector analog (transform_data.py:566)."""
-    return df.withColumn("search_tokens", search_tokens(*[F.col(c) for c in cols]))
-
-
 def query_events(
     events: DataFrame,
     source: str | None = None,

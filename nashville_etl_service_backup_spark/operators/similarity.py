@@ -409,26 +409,6 @@ def pm_signs(bits: str) -> list[float]:
     return [1.0 if c == "1" else -1.0 for c in bits]
 
 
-def banded_srp_buckets(
-    vec: Column, planes: list[list[float]], bands: int, planes_per_band: int
-) -> Column:
-    """OR-amplified SRP: one bit per plane, grouped into `bands` bucket
-    strings — candidates collide on ANY band (MinHash-banding analog for
-    cosine space)."""
-    bits = [
-        F.when(dot(vec, F.array(*[F.lit(s) for s in p])) >= 0, F.lit("1")).otherwise(
-            F.lit("0")
-        )
-        for p in planes
-    ]
-    return F.array(
-        *[
-            F.concat(*bits[b * planes_per_band : (b + 1) * planes_per_band])
-            for b in range(bands)
-        ]
-    )
-
-
 def banded_srp_buckets_vectorized(
     planes: list[list[float]], bands: int, planes_per_band: int
 ):
@@ -436,10 +416,10 @@ def banded_srp_buckets_vectorized(
     per batch instead of bands×planes_per_band interpreted HOF dot
     products per row (measured ~6× on the signature stage at sf0.1).
 
-    Bit semantics are identical to :func:`banded_srp_buckets` — bit b is
-    '1' iff dot(v, plane_b) >= 0 — up to float summation order (numpy
-    pairwise vs HOF sequential fold), which can only differ when the dot
-    product is within ~1e-12 of zero; never observed on real embeddings.
+    Bit b is '1' iff dot(v, plane_b) >= 0, up to float summation order
+    (numpy pairwise vs a sequential fold, as the DuckDB oracle sums),
+    which can only differ when the dot product is within ~1e-12 of
+    zero; never observed on real embeddings.
     """
     p_t = np.asarray(planes, dtype=np.float64).T  # (dim, n_planes)
 
@@ -534,11 +514,16 @@ def centroid_artifact(
     id are skipped (a degenerate vector assigned null by the
     vectorized sweep can flow into a re-centering aggregate as a real
     NULL group; it is not a centroid)."""
-    rows = [
-        r for r in cents.select(cent_id, cent_vec).collect()
-        if r[0] is not None and r[1] is not None
-    ]
-    rows.sort(key=lambda r: r[0])
+    return _artifact_of(cents.select(cent_id, cent_vec).collect())
+
+
+def _artifact_of(rows: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(cids ascending, C, chain-order norms) from collected (cid, cv)
+    rows, skipping rows with a null cid or vector."""
+    rows = sorted(
+        (r for r in rows if r[0] is not None and r[1] is not None),
+        key=lambda r: r[0],
+    )
     cids = np.array([int(r[0]) for r in rows], dtype=np.int64)
     C = np.array([list(r[1]) for r in rows], dtype=np.float64)
     acc = np.zeros(C.shape[0])
@@ -593,6 +578,23 @@ def _valid_vec_rows(
     return idxs, (np.vstack(vals) if vals else None)
 
 
+def _nearest(
+    V: np.ndarray, cids: np.ndarray, C: np.ndarray, nc: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(highest-cosine cid, vector norm) per row of V: chain-order
+    cosines (:func:`_chain_dots`), swept in ascending cid with ``>=``
+    so ties go to the higher cid — Spark's (c, cid) struct order."""
+    dots, nv = _chain_dots(V, C)
+    cos = _nan_as_greatest(dots / (nv[:, None] * nc[None, :]))
+    best = np.full(V.shape[0], -np.inf)
+    best_id = np.zeros(V.shape[0], dtype=np.int64)
+    for j in range(C.shape[0]):
+        m = cos[:, j] >= best
+        best = np.where(m, cos[:, j], best)
+        best_id = np.where(m, cids[j], best_id)
+    return best_id, nv
+
+
 def nearest_centroid_vectorized(
     cids: np.ndarray, C: np.ndarray, nc: np.ndarray
 ):
@@ -612,7 +614,7 @@ def nearest_centroid_vectorized(
     100 TB shape: the centroid closure is the broadcast (k×dim
     numbers ride the serialized udf), and assignment stays a narrow
     map — no join, no shuffle, no n×k row explosion."""
-    k, d = C.shape
+    d = C.shape[1]
 
     @F.pandas_udf("cid bigint, nv double")
     def _assign(vs: pd.Series) -> pd.DataFrame:
@@ -620,14 +622,7 @@ def nearest_centroid_vectorized(
         out_nv: list = [None] * len(vs)
         idxs, V = _valid_vec_rows(vs, d)
         if V is not None:
-            dots, nv = _chain_dots(V, C)
-            cos = _nan_as_greatest(dots / (nv[:, None] * nc[None, :]))
-            best = np.full(len(idxs), -np.inf)
-            best_id = np.zeros(len(idxs), dtype=np.int64)
-            for j in range(k):  # ascending cid: >= breaks ties upward
-                m = cos[:, j] >= best
-                best = np.where(m, cos[:, j], best)
-                best_id = np.where(m, cids[j], best_id)
+            best_id, nv = _nearest(V, cids, C, nc)
             for row, i in enumerate(idxs):
                 out_cid[i] = int(best_id[row])
                 out_nv[i] = float(nv[row])
@@ -718,28 +713,15 @@ def pq_codebook_artifact(
 ) -> dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]]:
     """{block: (cids, C, nc)} from a (block, cent_id, cv) codebook
     frame — the m×k×sub PQ model artifact, collected once (pq_fit's
-    existing LocalRelation pattern; NOT a data-sized collect). Norms
-    use the same chain-order accumulation as centroid_artifact; rows
-    with a null cent_id (degenerate-slice NULL groups from the
-    vectorized assignment) are skipped — same rule as
-    :func:`centroid_artifact`."""
-    rows = [
-        r for r in cents.select("block", "cent_id", "cv").collect()
-        if r["cent_id"] is not None and r["cv"] is not None
-    ]
+    existing LocalRelation pattern; NOT a data-sized collect). Each
+    block is built like :func:`centroid_artifact`; rows with a null
+    cent_id (degenerate-slice NULL groups from the vectorized
+    assignment) are skipped, so a block of only such rows is absent."""
     by_block: dict[int, list] = {}
-    for r in rows:
-        by_block.setdefault(int(r["block"]), []).append(r)
-    books = {}
-    for b, rs in by_block.items():
-        rs.sort(key=lambda r: r["cent_id"])
-        cids = np.array([int(r["cent_id"]) for r in rs], dtype=np.int64)
-        C = np.array([list(r["cv"]) for r in rs], dtype=np.float64)
-        acc = np.zeros(C.shape[0])
-        for i in range(C.shape[1]):
-            acc = acc + C[:, i] * C[:, i]
-        books[b] = (cids, C, np.sqrt(acc))
-    return books
+    for b, cid, cv in cents.select("block", "cent_id", "cv").collect():
+        if cid is not None and cv is not None:
+            by_block.setdefault(int(b), []).append((cid, cv))
+    return {b: _artifact_of(rows) for b, rows in by_block.items()}
 
 
 def pq_assign_vectorized(
@@ -766,14 +748,7 @@ def pq_assign_vectorized(
             idxs, V = _valid_vec_rows(sub_vs, C.shape[1])
             if V is None:
                 continue
-            dots, nv = _chain_dots(V, C)
-            cos = _nan_as_greatest(dots / (nv[:, None] * nc[None, :]))
-            best = np.full(len(idxs), -np.inf)
-            best_id = np.zeros(len(idxs), dtype=np.int64)
-            for j in range(C.shape[0]):
-                m = cos[:, j] >= best
-                best = np.where(m, cos[:, j], best)
-                best_id = np.where(m, cids[j], best_id)
+            best_id, _ = _nearest(V, cids, C, nc)
             for row, i in enumerate(idxs):
                 out[int(sel[i])] = int(best_id[row])
         return pd.Series(pd.array(out, dtype="Int64"))
@@ -1065,42 +1040,33 @@ def embedding_near_dup_pairs(
     # numpy matmul per batch (vectorized pandas_udf), not per-row HOF
     # dot products
     from nashville_etl_service_backup_spark.operators import spread, track_persist
+    from nashville_etl_service_backup_spark.operators.dedup import (
+        _band_pairs,
+        _pair_sides,
+    )
 
     sig = banded_srp_buckets_vectorized(planes, bands, planes_per_band)
-    emb = spread(emb)
     base = track_persist(
-        emb.select(
+        spread(emb).select(
             F.col(id_col).alias("doc_id"),
             v.alias("v"),
             sig(v).alias("bk"),
         )
     )
-    b = base.select("doc_id", F.posexplode("bk").alias("band_idx", "bucket"))
-    l, r = b.alias("l"), b.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
-        .distinct()
-    )
-    va = base.select(F.col("doc_id").alias("id_a"), F.col("v").alias("va"))
-    vb = base.select(F.col("doc_id").alias("id_b"), F.col("v").alias("vb"))
-    scored = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", cosine(F.col("va"), F.col("vb")))
+    scored = _pair_sides(_band_pairs(base, "bk"), base, "v").withColumn(
+        "cosine", cosine(F.col("v_a"), F.col("v_b"))
     )
     if top_k is not None:
         scored = scored.orderBy(
-            F.desc("cosine"), F.asc("id_a"), F.asc("id_b")
+            F.desc("cosine"), F.asc("doc_a"), F.asc("doc_b")
         ).limit(top_k)
     else:
         scored = scored.filter(F.col("cosine") >= threshold)
-    return scored.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+    return scored.select(
+        F.col("doc_a").alias("id_a"),
+        F.col("doc_b").alias("id_b"),
+        F.round("cosine", 6).alias("cosine"),
+    )
 
 
 def semantic_dedup_pairs(

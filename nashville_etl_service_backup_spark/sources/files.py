@@ -70,10 +70,13 @@ def read_csv_events(
 
 
 def read_json_events(spark: SparkSession, path: str) -> DataFrame:
-    """S18: scraper dump — JSON array (multiLine) or JSON-Lines."""
-    df = spark.read.option("multiLine", True).json(path)
+    """S18: scraper dump — JSON-Lines or a JSON array. Line mode reads
+    JSON-Lines and a one-line array; a pretty-printed array leaves every
+    line corrupt and is re-read whole (multiLine). Reading multiLine
+    first would silently keep only the first record of JSON-Lines."""
+    df = spark.read.json(path)
     if df.columns == ["_corrupt_record"]:
-        df = spark.read.json(path)
+        df = spark.read.option("multiLine", True).json(path)
     return normalize_columns(df)
 
 

@@ -52,13 +52,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return raw.withColumn("ts", F.col("ts").cast("timestamp"))
         return raw
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all testdata tables as temp views for spark.sql use."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -10,6 +10,7 @@ from nashville_etl_service_backup_spark.operators.dedup import (
     exact_dedup,
     exact_dedup_groups,
     lsh_near_dup_pairs,
+    ngram_jaccard_pairs,
     shingles,
     simhash64,
     simhash_near_dup_pairs,
@@ -63,6 +64,17 @@ def test_lsh_finds_planted_near_dup(spark):
     assert (1, 4) in got and got[(1, 4)] == 1.0  # exact dup
     assert (1, 2) in got and 0.5 <= got[(1, 2)] < 1.0  # planted near-dup
     assert not any(3 in p for p in got)  # unrelated doc never pairs
+
+
+def test_ngram_pairs_skip_docs_without_grams(spark):
+    """Docs shorter than n have no n-grams: they never pair (the DuckDB
+    oracle's NULL band keys), instead of all colliding on the empty
+    set's sentinel keys and dividing 0/0 in the verify."""
+    short = spark.createDataFrame([(5, "ab"), (6, "!!"), (7, None)], "doc_id long, text string")
+    pairs = ngram_jaccard_pairs(_docs(spark).unionByName(short), "doc_id", "text")
+    got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
+    assert (1, 4) in got and (1, 2) in got
+    assert not any(d in p for p in got for d in (5, 6, 7))
 
 
 def test_simhash_near_dup(spark):

@@ -719,12 +719,25 @@ def test_gd_trains_on_backtick_column_names(spark):
 
 
 def test_gd_reserved_name_collision_raises(spark):
-    """A caller column named like a GD-internal staging column fails
-    loudly instead of silently shadowing the staged value."""
+    """Only a FEATURE named like a staged GD column can collide: a
+    non-feature `_r` column never reaches the staged projection and
+    trains to the same weights, while a feature named `_r` fails
+    loudly instead of as an ambiguous reference inside Spark."""
     import pytest
 
-    feats = standardize(_toy(spark), ["x1", "x2"]).withColumn(
-        "_r", F.lit(1.0)
+    from nashville_etl_service_backup_spark.operators.ml import (
+        logreg_train_folds,
+    )
+
+    feats = standardize(_toy(spark), ["x1", "x2"])
+    extra = feats.withColumn("_r", F.lit(1.0))
+    assert logreg_train(extra, ["x1", "x2"], "y", iterations=2) == (
+        logreg_train(feats, ["x1", "x2"], "y", iterations=2)
     )
     with pytest.raises(ValueError, match="_r"):
-        logreg_train(feats, ["x1", "x2"], "y", iterations=1)
+        logreg_train(extra, ["x1", "_r"], "y", iterations=1)
+    folds = extra.withColumn("_fold", (F.col("id") % 2).cast("int"))
+    with pytest.raises(ValueError, match="_r1"):
+        logreg_train_folds(
+            folds.withColumnRenamed("x2", "_r1"), ["x1", "_r1"], "y", "_fold", 2, 1
+        )

@@ -10,6 +10,7 @@ from nashville_etl_service_backup_spark.sources.files import (
     normalize_columns,
     read_binary_documents,
     read_csv_events,
+    read_json_events,
 )
 from nashville_etl_service_backup_spark.sources.llm_extract import extract_with_llm
 from nashville_etl_service_backup_spark.sources.rest import (
@@ -17,6 +18,7 @@ from nashville_etl_service_backup_spark.sources.rest import (
     arcgis_requests,
     fetch_paged,
     google_places_requests,
+    seatgeek_requests,
     ticketmaster_requests,
     to_dataframe,
     yelp_requests,
@@ -99,6 +101,29 @@ def test_csv_synonym_normalization(spark, tmp_path):
     assert float(row.latitude) == 36.1 and float(row.longitude) == -86.8
 
 
+def test_json_array_and_json_lines(spark, tmp_path):
+    """S18: a scraper dump loads as a JSON array or as JSON-Lines, with
+    synonym headers normalized either way."""
+    recs = [
+        {"Title": "Food Fest", "link": "https://x/1", "venue": "Park"},
+        {"Title": "Jazz Night", "link": "https://x/2", "venue": "Ryman"},
+    ]
+    arr = tmp_path / "array.json"
+    arr.write_text(json.dumps(recs, indent=2))
+    one_line = tmp_path / "one_line.json"
+    one_line.write_text(json.dumps(recs))
+    lines = tmp_path / "lines.json"
+    lines.write_text("\n".join(json.dumps(r) for r in recs) + "\n")
+    want = [("Food Fest", "https://x/1", "Park"), ("Jazz Night", "https://x/2", "Ryman")]
+    for p in (arr, one_line, lines):
+        df = read_json_events(spark, str(p))
+        got = sorted(
+            (r.name, r.url, r.venue_name)
+            for r in df.select("name", "url", "venue_name").collect()
+        )
+        assert got == want, p.name
+
+
 def test_synonym_coalesce_multiple_columns(spark):
     df = spark.createDataFrame(
         [("", "Actual Name", "u1"), ("First Name", "", "u2")],
@@ -123,6 +148,11 @@ def test_rest_request_builders_pushdown():
     tm = list(ticketmaster_requests("KEY", "2025-01-01T00:00:00Z"))
     assert len(tm) == 5  # page cap (ticketmaster_spider.py:39)
     assert tm[0].params["dmaId"] == "343" and tm[0].params["sort"] == "date,asc"
+    sg = list(seatgeek_requests("ID"))  # 10 × 50 (seatgeek_spider.py:55,22)
+    assert [r.params["page"] for r in sg] == [str(p) for p in range(1, 11)]
+    for r in sg:
+        assert r.params["per_page"] == "50" and r.params["client_id"] == "ID"
+        assert (r.params["venue.city"], r.params["venue.state"]) == ("Nashville", "TN")
     y = list(yelp_requests("KEY", "bars"))
     assert len(y) == 20 and y[-1].params["offset"] == "950"  # cap 1000
     g = list(google_places_requests("KEY"))
