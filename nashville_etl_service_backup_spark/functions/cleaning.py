@@ -52,3 +52,12 @@ def standardize_price(price: Column) -> Column:
 def title_case_category(c: Column) -> Column:
     """F11: '_'→' ' then title-case (transform_data.py:79 etc.)."""
     return F.initcap(F.regexp_replace(c, "_", " "))
+
+
+def clean_string(c: Column) -> Column:
+    """P7 (document_spider.py:383-407): stringify, strip; ''/'nan'/'none'
+    → NULL."""
+    s = F.trim(c.cast("string"))
+    return F.when(
+        s.isNull() | (s == "") | F.lower(s).isin("nan", "none", "null"), F.lit(None)
+    ).otherwise(s)

@@ -99,21 +99,27 @@ def _minhash_bands(
     per_digest: int,
     width: int,
     bands: int,
-) -> DataFrame:
-    """``frame`` plus ``bands``: the banded MinHash keys of the string
-    set ``set_col``, folded digest first.
+) -> tuple[DataFrame, Column]:
+    """The banded MinHash keys of the string set ``set_col``, folded
+    digest first: ``frame`` plus the staged slot mins ``_mins``, and
+    the band-key array over them as an expression.
 
-    Each element is hashed once per salt (md5 of salt + element; the
-    empty salt hashes the element itself), and each digest's first
-    ``per_digest`` slices of ``width`` hex chars are independent
-    uniform hashes: one aggregate per salt folds them into running mins
-    ('~' sorts above hex), giving len(salts)·per_digest MinHash slots.
+    Each element is hashed once per salt (md5 of salt + element), and
+    each digest's first ``per_digest`` slices of ``width`` hex chars
+    are independent uniform hashes: one aggregate per salt folds them
+    into running mins ('~' sorts above hex), giving
+    len(salts)·per_digest MinHash slots.
     Hashing inside the slot lambda would hash each element once per
     slot, and a per-slot array_min(transform(md5)) column set re-derives
     the md5 pipeline per column. Band b joins slots b·r .. b·r + r − 1
     with '|', r = slots div ``bands``. An empty set has NULL bands, so
     it is never a candidate (its keys would be the '~' sentinels, equal
-    for every empty set, and its Jaccard 0/0)."""
+    for every empty set, and its Jaccard 0/0).
+
+    The mins are staged in their own projection because each band key
+    reads them and an inlined fold would run once per key. The keys
+    stay an expression so that a caller can posexplode them without a
+    staged column (see _band_pairs)."""
     if per_digest * width > 32:
         raise ValueError(
             f"{per_digest} slices of {width} hex chars exceed an md5 digest"
@@ -123,8 +129,7 @@ def _minhash_bands(
 
     def salt_mins(salt: str) -> Column:
         digests = F.transform(
-            F.col(set_col),
-            lambda t: F.md5(F.concat(F.lit(salt), t)) if salt else F.md5(t),
+            F.col(set_col), lambda t: F.md5(F.concat(F.lit(salt), t))
         )
         return F.aggregate(
             digests,
@@ -145,12 +150,8 @@ def _minhash_bands(
         )
         for b in range(bands)
     ]
-    # the mins are staged in their own projection: each band key reads
-    # them, and an inlined fold would run once per key
-    return (
-        frame.withColumn("_mins", mins)
-        .withColumn("bands", F.when(F.size(set_col) > 0, F.array(*keys)))
-        .drop("_mins")
+    return frame.withColumn("_mins", mins), F.when(
+        F.size(set_col) > 0, F.array(*keys)
     )
 
 
@@ -216,11 +217,12 @@ def _signature_frame(
     shingle_n: int,
     num_hashes: int,
     bands: int,
-) -> DataFrame:
-    """(doc_id, sh, bands) frame shared by the batch pair-finder and the
-    streaming signature store: shingle sets plus the banded MinHash
-    band-hash array, num_hashes 8-hex-char slices of one md5 per
-    shingle (NULL bands for shingle-less docs). Callers
+) -> tuple[DataFrame, Column]:
+    """Signatures shared by the batch pair-finder and the streaming
+    signature store: a (doc_id, sh, _mins) frame of shingle sets and
+    their MinHash slot mins, num_hashes 8-hex-char slices of one md5
+    per shingle, and the band-hash array expression over it (NULL for
+    shingle-less docs), as _minhash_bands returns them. Callers
     persist/materialize as their access pattern requires."""
     toks = tokenize(F.col("_txt"))
     sh = shingles(toks, shingle_n)
@@ -248,9 +250,8 @@ def band_signatures(
     and probes (same md5-slice MinHash math as lsh_near_dup_pairs, so a
     store built here and a batch dedup over the same corpus agree on
     candidates)."""
-    return _signature_frame(
-        df, id_col, text_col, shingle_n, num_hashes, bands
-    ).select("doc_id", F.posexplode("bands").alias("band_idx", "band_hash"))
+    sig, keys = _signature_frame(df, id_col, text_col, shingle_n, num_hashes, bands)
+    return sig.select("doc_id", F.posexplode(keys).alias("band_idx", "band_hash"))
 
 
 def lsh_near_dup_pairs(
@@ -278,10 +279,9 @@ def lsh_near_dup_pairs(
     # after consuming the (lazy) result.
     from nashville_etl_service_backup_spark.operators import register_checkpoint
 
+    sig, keys = _signature_frame(df, id_col, text_col, shingle_n, num_hashes, bands)
     base = register_checkpoint(
-        _signature_frame(
-            df, id_col, text_col, shingle_n, num_hashes, bands
-        ).localCheckpoint(eager=False)
+        sig.select("doc_id", "sh", keys.alias("bands")).localCheckpoint(eager=False)
     )
     return _jaccard_pairs(
         _band_pairs(base, "bands"),
@@ -344,11 +344,10 @@ def ngram_jaccard_pairs(
     grams = spread(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_txt"))
     ).select("doc_id", char_ngrams(F.col("_txt"), n).alias("g"))
-    base = track_persist(
-        _minhash_bands(
-            grams, "g", [f"{b}:" for b in range(bands)], hashes_per_band, 6, bands
-        )
+    sig, keys = _minhash_bands(
+        grams, "g", [f"{b}:" for b in range(bands)], hashes_per_band, 6, bands
     )
+    base = track_persist(sig.select("doc_id", "g", keys.alias("bands")))
     return _jaccard_pairs(
         _band_pairs(base, "bands"),
         base,
@@ -415,12 +414,12 @@ def simhash_pairs_from_sigs(
     path (operators/multimodal.py) — the blocking algebra is identical
     whatever produced the 64 bits."""
     # each doc's signature rides through the chunk join inside its
-    # (doc_id, sig) key, so no verify join fetches it back: ids are
-    # unique, so the struct order is the doc_id order once NULL ids
-    # (which never pair) are dropped
-    keyed = base.filter(F.col("doc_id").isNotNull()).select(
-        F.struct("doc_id", "sig").alias("doc_id"), "sig"
-    )
+    # (doc_id, sig) key, so no verify join fetches it back and reruns
+    # the unmaterialized signature pass (with _pair_sides,
+    # dedup_simhash_pairs took 2.6 s against 1.4 s at sf0.1 on 4
+    # vCPUs); the struct order breaks a repeated id's tie on sig, so
+    # the ids themselves are compared too
+    keyed = base.select(F.struct("doc_id", "sig").alias("doc_id"), "sig")
     chunks = F.array(*[F.substring("sig", 1 + 16 * i, 16) for i in range(4)])
     hamming = F.size(
         F.filter(
@@ -434,6 +433,7 @@ def simhash_pairs_from_sigs(
     )
     return (
         _band_pairs(keyed, chunks)
+        .filter(F.col("doc_a.doc_id") < F.col("doc_b.doc_id"))
         .withColumn("hamming", hamming.cast("long"))
         .filter(F.col("hamming") <= max_hamming)
         .select(

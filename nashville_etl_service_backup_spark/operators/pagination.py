@@ -43,6 +43,11 @@ def paginate(
     return out.drop("_rn")
 
 
+def page_count(total: Column, per_page: int = PER_PAGE) -> Column:
+    """A5 (db_extractor.py:50): ceil(total/per_page)."""
+    return F.ceil(total / F.lit(per_page)).cast("long")
+
+
 def pagination_links(
     current_page: Column, total_pages: Column, max_visible: int = 5
 ) -> Column:

@@ -70,13 +70,20 @@ def read_csv_events(
 
 
 def read_json_events(spark: SparkSession, path: str) -> DataFrame:
-    """S18: scraper dump — JSON-Lines or a JSON array. Line mode reads
-    JSON-Lines and a one-line array; a pretty-printed array leaves every
-    line corrupt and is re-read whole (multiLine). Reading multiLine
-    first would silently keep only the first record of JSON-Lines."""
-    df = spark.read.json(path)
-    if df.columns == ["_corrupt_record"]:
-        df = spark.read.option("multiLine", True).json(path)
+    """S18: scraper dump — a JSON array or JSON-Lines, told apart by the
+    first non-blank character. An array ('[', whatever its layout,
+    e.g. Scrapy's one object per line with trailing commas) is read
+    whole (multiLine); anything else is JSON-Lines, read line by line.
+    multiLine on JSON-Lines would keep only the first record, and line
+    mode on an array would turn its bracket lines into corrupt rows."""
+    head = (
+        spark.read.text(path)
+        .select(F.regexp_extract("value", r"^\s*(\S)", 1).alias("c"))
+        .filter(F.col("c") != "")
+        .first()
+    )
+    multi_line = head is not None and head.c == "["
+    df = spark.read.option("multiLine", multi_line).json(path)
     return normalize_columns(df)
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nashville_etl_service_backup_spark.functions.cleaning import (
+    clean_string,
     safe_double,
     standardize_price,
     standardize_venue_name,
@@ -59,6 +60,20 @@ def test_safe_double(spark):
         "x string",
     )
     assert got == [36.16, -86.78, None, None, None]
+
+
+def test_clean_string(spark):
+    """P7 (document_spider.py:383-407): stringify + strip; empty and
+    NaN/None/null spellings become NULL."""
+    got = _one(
+        spark,
+        clean_string(F.col("x")),
+        [("  Ryman ",), ("",), ("   ",), ("NaN",), ("None",), ("null",), (None,)],
+        "x string",
+    )
+    assert got == ["Ryman", None, None, None, None, None, None]
+    nums = _one(spark, clean_string(F.col("n")), [(36.5,), (float("nan"),)], "n double")
+    assert nums == ["36.5", None]
 
 
 def test_title_case_category(spark):

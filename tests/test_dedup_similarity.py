@@ -14,6 +14,7 @@ from nashville_etl_service_backup_spark.operators.dedup import (
     shingles,
     simhash64,
     simhash_near_dup_pairs,
+    simhash_pairs_from_sigs,
 )
 from nashville_etl_service_backup_spark.operators.similarity import (
     as_double,
@@ -86,6 +87,21 @@ def test_simhash_near_dup(spark):
     assert got[(1, 4)] == 0  # identical text → identical signature
     assert (1, 2) in got  # near-dup within hamming 10
     assert (1, 3) not in got and (2, 3) not in got
+
+
+def test_simhash_pairs_never_pair_a_repeated_id(spark):
+    """A repeated doc_id with two different signatures never pairs with
+    itself: the pair order is the id order, not the (id, sig) order of
+    the join key that carries each signature."""
+    base = spark.createDataFrame(
+        [(1, "0" * 64), (1, "0" * 63 + "1"), (2, "0" * 62 + "11"), (None, "0" * 64)],
+        "doc_id long, sig string",
+    )
+    got = sorted(
+        (r.doc_a, r.doc_b, r.hamming)
+        for r in simhash_pairs_from_sigs(base, max_hamming=3).collect()
+    )
+    assert got == [(1, 2, 1), (1, 2, 2)]
 
 
 def _emb(spark):

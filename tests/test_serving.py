@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from nashville_etl_service_backup_spark.operators.pagination import paginate
+from nashville_etl_service_backup_spark.operators.pagination import page_count, paginate
 from nashville_etl_service_backup_spark.operators.serving import (
     count_with_filters,
     distinct_values,
@@ -79,6 +79,14 @@ def test_paginate_keep_row_number(spark):
     page = paginate(df, [F.asc("k")], page=2, per_page=3, keep_row_number=True)
     rows = page.collect()
     assert [(r.k, r.row_num) for r in rows] == [(3, 4), (4, 5), (5, 6)]
+
+
+def test_page_count(spark):
+    """A5 page math (db_extractor.py:50): ceil(total/per_page); a
+    partial last page counts, no rows is no pages."""
+    df = spark.createDataFrame([(0,), (1,), (50,), (51,), (None,)], "t long")
+    got = [r.v for r in df.select(page_count(F.col("t"), 50).alias("v")).collect()]
+    assert got == [0, 1, 1, 2, None]
 
 
 def test_search_topk_posting_matches_scan_plan(spark):

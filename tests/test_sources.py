@@ -112,16 +112,21 @@ def test_json_array_and_json_lines(spark, tmp_path):
     arr.write_text(json.dumps(recs, indent=2))
     one_line = tmp_path / "one_line.json"
     one_line.write_text(json.dumps(recs))
+    # `scrapy crawl X -o X.json`: '[', one object per line with a
+    # trailing comma, ']'
+    scrapy = tmp_path / "scrapy.json"
+    scrapy.write_text("[\n" + ",\n".join(json.dumps(r) for r in recs) + "\n]")
     lines = tmp_path / "lines.json"
     lines.write_text("\n".join(json.dumps(r) for r in recs) + "\n")
     want = [("Food Fest", "https://x/1", "Park"), ("Jazz Night", "https://x/2", "Ryman")]
-    for p in (arr, one_line, lines):
+    for p in (arr, one_line, scrapy, lines):
         df = read_json_events(spark, str(p))
         got = sorted(
             (r.name, r.url, r.venue_name)
             for r in df.select("name", "url", "venue_name").collect()
         )
         assert got == want, p.name
+        assert "_corrupt_record" not in df.columns, p.name
 
 
 def test_synonym_coalesce_multiple_columns(spark):
