@@ -44,7 +44,8 @@ def register_checkpoint(cp: DataFrame) -> DataFrame:
     lineage: every later plan starts from a leaf instead of
     re-analyzing and re-planning all of the upstream plan, as a
     persist()ed frame makes each consumer do. Under AQE the leaf
-    reports no output partitioning.
+    reports no output partitioning, so a consumer that joins or groups
+    on a key shuffles again whatever layout the checkpoint was built in.
 
     Unlike a persist()ed frame, blocks lost with an executor are not
     recomputed from lineage: a query reading them fails and must be

@@ -482,32 +482,29 @@ def connected_components(
     Jaccard) feed at scale: pairs chain (A~B, B~C) and the dedup
     decision needs the transitive closure, not the raw pairs.
 
-    Scale shape: each iteration shuffles only (node, label) pairs —
-    never document content — via one equi-join of the edges with the
-    labels, unioned with the labels themselves (each node's closed
-    neighbourhood), and one min-groupBy, both map-side combinable.
-    Label propagation converges in O(cluster diameter) iterations;
-    near-dup clusters are shallow (dozens of docs), so 3-5 iterations
-    in practice. Driver participates only in
-    the convergence test (a scalar sum per round, observed on the
-    round's own job) — no row data ever reaches the driver.
+    Pregel-style supersteps: the state is one row per node,
+    (node, lbl, nbrs), so the adjacency travels with the labels and no
+    round joins against a separate edge list. One aggregate over the
+    symmetric pair list builds it with round 1 already applied,
+    lbl = least(node, min(nbrs)), which reaches the same fixed point one
+    round sooner than lbl = node. Each round then sends every node's
+    label to its neighbours (explode(nbrs) → (nbr, lbl, NULL)), unions
+    the nodes' own rows and takes min(lbl) per node while
+    flatten(collect_list(nbrs)) carries the one non-NULL adjacency
+    through: one shuffle of (node, label) messages, never document
+    content. A node of degree d carries a d-element array through every
+    round, so a hub node's row grows with its degree. Label propagation
+    converges in O(cluster diameter) rounds; near-dup clusters are
+    shallow, so 3-5 rounds in practice.
 
-    Barriers: the symmetric edge list is materialized as an eager
-    ``localCheckpoint`` (on a real cluster, checkpoint to durable
-    storage instead), so each round's plan starts from a lineage-free
-    leaf instead of re-planning the pair producer (LSH, the funnel)
-    once per round. Under AQE a checkpoint reports UnknownPartitioning,
-    so each round shuffles the edges for its join whatever their
-    layout. A hash repartition on src before the checkpoint only adds
-    a job and a shuffle: without it, graftbench corpus_curation ran no
-    slower (6 alternating pairs, 4 vCPUs). The labels start with round 1
-    already applied, least(src, min(dst)) per src, which reaches the
-    same fixed point one round sooner than lbl = node. Each round's
-    labels are an eager checkpoint whose job also yields the round's
-    convergence sum, sum(lbl), through an Observation, so no separate
-    aggregate job runs; the superseded round's labels are freed once
-    the next round is checkpointed, the edges when the loop ends, and
-    the final labels are registered for release_persisted().
+    Barriers: each state is an eager ``localCheckpoint`` (on a real
+    cluster, checkpoint to durable storage instead), so a round's plan
+    starts from a lineage-free leaf instead of re-planning the pair
+    producer (LSH, the funnel), and the checkpoint's own job yields the
+    round's convergence sum, sum(lbl), through an Observation: a round
+    is 2 jobs (the shuffle's map stage and the checkpoint). The
+    superseded state is freed once the next one is checkpointed, and the
+    final state is registered for release_persisted().
     """
     from nashville_etl_service_backup_spark.operators import (
         free_checkpoint,
@@ -515,54 +512,44 @@ def connected_components(
     )
 
     e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    edges = (
-        e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .localCheckpoint()
+    sym = e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
 
-    def checkpoint_with_sum(lbls: DataFrame):
+    def checkpoint_with_sum(state: DataFrame):
         # labels are monotonically non-increasing, so sum(lbl) strictly
         # decreases until the fixed point — a one-number convergence
         # probe, read off the checkpoint's own job (NULL on no rows)
         obs = Observation()
-        cp = lbls.observe(obs, F.sum("lbl").alias("s")).localCheckpoint()
+        cp = state.observe(obs, F.sum("lbl").alias("s")).localCheckpoint()
         return cp, obs.get["s"]
 
-    labels, prev_sum = checkpoint_with_sum(
-        edges.groupBy("src")
-        .agg(F.least(F.col("src"), F.min("dst")).alias("lbl"))
-        .withColumnRenamed("src", "node")
+    state, prev_sum = checkpoint_with_sum(
+        sym.groupBy(F.col("src").alias("node")).agg(
+            F.least(F.col("src"), F.min("dst")).alias("lbl"),
+            F.collect_list("dst").alias("nbrs"),
+        )
     )
     converged = False
     for _ in range(max_iter):
-        # NOTE (round 10): SHUFFLE_HASH hints on the label-sized sides
-        # (pagerank's per-round device) were probed and REVERTED —
-        # alternating A/B showed no reliable win (the consumers' label
-        # tables are small enough that the planner already picks
-        # broadcast/efficient strategies; forcing a shuffle can only
-        # lose, the BFS lesson). cc_bfs_hint_probe.json.
-        #
-        # the closed neighbourhood in ONE aggregate (the node's own label
-        # unioned with its neighbours'): a second join back to the labels
-        # would cost two more shuffles per round, because the checkpoints
-        # carry no partitioning under AQE
+        # messages carry NULL nbrs, which collect_list skips, so each
+        # node collects exactly its own adjacency array
+        msgs = state.select(F.explode("nbrs").alias("node"), "lbl")
         nxt, cur_sum = checkpoint_with_sum(
-            edges.join(labels, edges["src"] == labels["node"])
-            .select(F.col("dst").alias("node"), "lbl")
-            .unionByName(labels)
+            state.unionByName(msgs, allowMissingColumns=True)
             .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
+            .agg(
+                F.min("lbl").alias("lbl"),
+                F.flatten(F.collect_list("nbrs")).alias("nbrs"),
+            )
         )
-        free_checkpoint(labels)
-        labels = nxt
+        free_checkpoint(state)
+        state = nxt
         if cur_sum == prev_sum:
             converged = True
             break
         prev_sum = cur_sum
-    free_checkpoint(edges)
-    register_checkpoint(labels)
+    register_checkpoint(state)
     if not converged:
         # labels are still moving: some cluster has diameter > max_iter
         # and the returned components are WRONG (split clusters). Loudly
@@ -576,7 +563,7 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    return labels.select("node", F.col("lbl").alias("component"))
+    return state.select("node", F.col("lbl").alias("component"))
 
 
 def resolve_duplicates(

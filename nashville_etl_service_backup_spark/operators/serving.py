@@ -13,7 +13,9 @@ unique tiebreak appended for determinism.
 
 Scale: filters reach the parquet scan as pushed predicates; the text
 predicate prunes via the token array before ranking; pagination takes
-top-k, not a full materialized sort.
+top-k, not a full materialized sort. `distinct_values` sorts its rows in
+a single partition: the caller collects the whole result to the driver,
+so that one task never holds more than the driver receives.
 """
 
 from __future__ import annotations
@@ -125,12 +127,17 @@ def search_topk_posting(
 
 
 def distinct_values(events: DataFrame, column: str) -> DataFrame:
-    """A2 (db_extractor.py:28-32): SELECT DISTINCT col WHERE NOT NULL ORDER BY."""
+    """A2 (db_extractor.py:28-32): SELECT DISTINCT col WHERE NOT NULL ORDER BY.
+
+    One exchange: the distinct's hash shuffle, then a sort inside one
+    partition. A global orderBy would add a range partitioner's
+    sampling job and a second shuffle (4 jobs under AQE, not 2)."""
     return (
         events.select(column)
         .where(F.col(column).isNotNull())
         .distinct()
-        .orderBy(column)
+        .coalesce(1)
+        .sortWithinPartitions(column)
     )
 
 

@@ -944,14 +944,16 @@ def chunk_token_windows(
     chunks = F.transform(
         starts, lambda i: F.slice(toks, (i * stride + 1).cast("int"), window)
     )
-    base = df.select(
+    # explode the expression, not a staged column: over a column Spark
+    # infers size(_ch) > 0 and pushes that Filter, with the whole
+    # tokenize/chunk expression, below any Exchange into the scan
+    ex = df.select(
         F.col(id_col),
-        F.when(n >= 1, chunks)
-        .otherwise(F.array().cast("array<array<string>>"))
-        .alias("_ch"),
-    )
-    ex = base.select(
-        id_col, F.posexplode("_ch").alias("chunk_idx", "_c")
+        F.posexplode(
+            F.when(n >= 1, chunks).otherwise(
+                F.array().cast("array<array<string>>")
+            )
+        ).alias("chunk_idx", "_c"),
     )
     return ex.select(
         F.col(id_col),

@@ -35,12 +35,14 @@ def raw_zone_append(
 def dedup_new_rows(batch: DataFrame, existing: DataFrame | None) -> DataFrame:
     """K2/J2: rows of `batch` whose url is not in `existing`, after
     within-batch dedup. Broadcast the existing keys when beneficial —
-    only the url column is shuffled/broadcast, never full rows."""
+    only the url column is shuffled/broadcast, never full rows. Keeps
+    the batch's column order: a USING join moves the key to the front,
+    and appended files must match the files an overwrite wrote."""
     deduped = batch.dropDuplicates(["url"])
     if existing is None:
         return deduped
     keys = existing.select("url").distinct()
-    return deduped.join(keys, "url", "left_anti")
+    return deduped.join(keys, "url", "left_anti").select(*batch.columns)
 
 
 def load_events(

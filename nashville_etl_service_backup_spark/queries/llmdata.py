@@ -4641,6 +4641,8 @@ def text_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cal = feats.filter(F.col("_b") == 1).select(s_true.alias("s"))
     hist = cal.groupBy("s").agg(F.count(F.lit(1)).alias("c"))
+    # unpartitioned window: one task, but over the histogram, so its rows
+    # are bounded by the number of distinct rounded scores, not by docs
     wcum = Window.orderBy("s").rowsBetween(
         Window.unboundedPreceding, 0
     )

@@ -200,7 +200,7 @@ def test_resolve_duplicates_keeps_representatives(spark):
 def test_connected_components_matches_union_find(spark):
     """The label seed already applies round 1 (least(src, min(dst))):
     same components as a union-find on a 6-chain, a star and two
-    disjoint pairs, and the job budget pins the folded round."""
+    disjoint pairs, and the job budget pins the one-shuffle rounds."""
     from nashville_etl_service_backup_spark.operators.dedup import (
         connected_components,
     )
@@ -231,9 +231,9 @@ def test_connected_components_matches_union_find(spark):
         sc.setLocalProperty("spark.job.description", None)
     assert got == want
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    # folded first round + one-aggregate rounds, each round's
-    # convergence sum observed on its checkpoint job
-    assert len(jobs) <= 29, jobs
+    # the seed aggregate + one-shuffle supersteps (2 jobs each), each
+    # round's convergence sum observed on its checkpoint job
+    assert len(jobs) <= 13, jobs
 
 
 def test_connected_components_empty_pairs(spark):

@@ -111,6 +111,31 @@ def test_raw_zone_append_round_trip(spark, tmp_path):
     assert load_events(spark, run_pipeline(spark.read.parquet(raw), now_year=2025), sink) == 0
 
 
+def test_appended_files_keep_event_field_order(spark, tmp_path):
+    """Every file of the sink, overwritten or appended, stores the
+    columns in EVENT_FIELDS order, so the sink's inferred schema does
+    not depend on which footer the reader samples."""
+    import pyarrow.parquet as pq
+
+    def events(n0, n1):
+        raw = spark.createDataFrame(
+            [(i, "yelp", json.dumps({"name": f"E{i}", "url": f"https://yelp/{i}"}))
+             for i in range(n0, n1)],
+            "id long, source_spider string, raw_json string",
+        )
+        return run_pipeline(raw, now_year=2025)
+
+    sink = tmp_path / "events"
+    assert load_events(spark, events(0, 4), str(sink), mode="overwrite") == 4
+    assert load_events(spark, events(2, 7), str(sink), mode="append") == 3
+    assert load_events(spark, events(6, 9), str(sink), mode="append") == 2
+    files = sorted(sink.glob("*.parquet"))
+    assert len(files) >= 3
+    for f in files:
+        assert pq.read_schema(f).names == EVENT_FIELDS, f.name
+    assert spark.read.parquet(str(sink)).columns == EVENT_FIELDS
+
+
 def test_export_json_read_back(spark, tmp_path):
     """K5: the JSON export reads back with the same rows and columns."""
     raw = spark.createDataFrame(

@@ -324,6 +324,16 @@ def test_funnel_filters_stay_above_spread(spark):
     assert _around_round_robin(funnel, "CollectMetrics") == (1, 0)
 
 
+def test_chunk_windows_tokenize_once_above_spread(spark):
+    """Chunking explodes the chunk expression itself: no size() > 0
+    Filter is inferred and pushed below spread()'s round-robin Exchange,
+    so the tokenizer runs once per document, in the spread tasks."""
+    df = extended_queries()["text_chunk_windows"](spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert _around_round_robin(plan) == (0, 0)
+    assert _around_round_robin(plan, "Generate") == (1, 0)
+
+
 def test_dup_spans_hashed_equi_join_no_text_shuffle(spark):
     """Duplicated-span audit: candidate aggregation and the doc-frequency
     join move only (md5 hash, id, count) — document text never crosses an

@@ -74,6 +74,45 @@ def test_distinct_and_count(events):
     assert total == 2
 
 
+def _dims(spark, tmp_path, values):
+    """A parquet sink of ``values`` spread over several files, read back
+    the way the page view reads the events sink."""
+    path = str(tmp_path / "dims")
+    rows = [(v,) for v in values]
+    spark.createDataFrame(rows, "v string").repartition(4).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_distinct_values_ascending_without_nulls(spark, tmp_path):
+    vals = [f"s{i % 7}" for i in range(60, 0, -1)] + [None] * 5 + ["A", "z"]
+    dims = _dims(spark, tmp_path, vals)
+    got = [r.v for r in distinct_values(dims, "v").collect()]
+    assert got == sorted({v for v in vals if v is not None})
+
+
+def test_distinct_values_empty_input(spark, tmp_path):
+    assert distinct_values(_dims(spark, tmp_path, [None, None]), "v").collect() == []
+    empty = spark.createDataFrame([], "v string")
+    assert distinct_values(empty, "v").collect() == []
+
+
+def test_distinct_values_job_budget(spark, tmp_path):
+    """One exchange per dropdown: the distinct's shuffle and the
+    single-partition sort, no range-partitioner sampling job."""
+    dims = _dims(spark, tmp_path, [f"s{i % 5}" for i in range(40)])
+    sc = spark.sparkContext
+    group = "test-distinct-values"
+    sc.setJobGroup(group, "distinct_values")
+    try:
+        got = [r.v for r in distinct_values(dims, "v").collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == ["s0", "s1", "s2", "s3", "s4"]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 2, jobs
+
+
 def test_paginate_keep_row_number(spark):
     df = spark.range(10).withColumnRenamed("id", "k")
     page = paginate(df, [F.asc("k")], page=2, per_page=3, keep_row_number=True)
