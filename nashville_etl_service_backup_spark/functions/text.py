@@ -5,7 +5,8 @@ db_extractor.py:44-51) is re-expressed as a token-array model:
 - search_tokens: lowercase, strip non-alphanumerics, split, distinct —
   the engine's documented analog of to_tsvector('english', ...). No
   stemming (divergence from Postgres english stemmer, documented).
-- text_match:  arrays_overlap(tokens, query_tokens)   (@@ analog)
+- text_match:  size(tokens ∩ query) == size(query)    (@@ analog: AND,
+  every query term present, as plainto_tsquery)
 - text_rank:   |tokens ∩ query| / |tokens|            (ts_rank analog)
 
 All pure built-in expressions — JVM-side, codegen-friendly.

@@ -155,18 +155,23 @@ class _adaptive_off:
     BENCH_ISOLATIONS_r10/barrier_profile.json). Scoped so every other
     query keeps AQE; restore is exception-safe."""
 
+    _KEY = "spark.sql.adaptive.enabled"
+
     def __init__(self, df: DataFrame):
         self._spark = df.sparkSession
 
     def __enter__(self):
-        self._old = self._spark.conf.get(
-            "spark.sql.adaptive.enabled", "true"
-        )
-        self._spark.conf.set("spark.sql.adaptive.enabled", "false")
+        self._old = self._spark.conf.get(self._KEY, None)
+        self._spark.conf.set(self._KEY, "false")
         return self
 
     def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.adaptive.enabled", self._old)
+        # A key that was unset goes back to unset, so it keeps following
+        # the session default rather than pinning today's value.
+        if self._old is None:
+            self._spark.conf.unset(self._KEY)
+        else:
+            self._spark.conf.set(self._KEY, self._old)
         return False
 
 

@@ -1,24 +1,24 @@
 """Deterministic LIMIT/OFFSET pagination — O3 (db_extractor.py:18,53-57).
 
-Top-k first, number second: `orderBy(...).limit(page*per_page)` plans as
-TakeOrderedAndProject — a per-partition heap of at most page*per_page rows
-merged on the driver side of the exchange, never a global sort — and only
-then `row_number` over the (≤ page*per_page row) survivors to apply the
-OFFSET. The caller MUST include a unique tiebreak column in `order_by` so
-the total order (and therefore the page contents) is deterministic.
+`orderBy(...).limit(page*per_page).offset((page-1)*per_page)` is the
+reference's `ORDER BY … LIMIT n OFFSET m` verbatim, and plans as one
+`TakeOrderedAndProject(limit=page*per_page, offset=(page-1)*per_page)`: a
+per-partition heap of at most page*per_page rows, merged into one ordered
+list from which the first (page-1)*per_page rows are dropped. No global
+sort, no window and no exchange, so the page query runs as one job and
+AQE has nothing to re-plan. The caller MUST include a unique tiebreak
+column in `order_by` so the total order (and therefore the page contents)
+is deterministic.
 
-At 100 TB the pre-limit window variant is the classic scale-killer (every
-surviving row moves to ONE task to be numbered); this shape touches only
-k rows past the scan. Deep OFFSETs still pay O(page*per_page) — for a
-true deep-paging API use key-set pagination (filter on last-seen key)
-instead.
+At 100 TB this touches only page*per_page rows past the scan. Deep
+OFFSETs still pay O(page*per_page) — for a true deep-paging API use
+key-set pagination (filter on last-seen key) instead.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 PER_PAGE = 25  # app.py:10; db_extractor.py:6
 
@@ -28,19 +28,13 @@ def paginate(
     order_by: list[Column],
     page: int = 1,
     per_page: int = PER_PAGE,
-    keep_row_number: bool = False,
 ) -> DataFrame:
-    lo = (page - 1) * per_page
-    hi = page * per_page
-    # TakeOrderedAndProject: per-partition top-hi heaps, no global sort.
-    top = df.orderBy(*order_by).limit(hi)
-    # Numbering runs over ≤ hi rows — the single-partition window is on a
-    # page-sized frame, not the table.
-    w = Window.orderBy(*order_by)
-    out = top.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") > lo)
-    if keep_row_number:
-        return out.withColumnRenamed("_rn", "row_num")
-    return out.drop("_rn")
+    """Rows [(page-1)*per_page, page*per_page) of `df` in `order_by`
+    order. Pages and page sizes start at 1; a past-the-end page is
+    empty."""
+    if page < 1 or per_page < 1:
+        raise ValueError(f"page and per_page must be >= 1, got {page}, {per_page}")
+    return df.orderBy(*order_by).limit(page * per_page).offset((page - 1) * per_page)
 
 
 def page_count(total: Column, per_page: int = PER_PAGE) -> Column:

@@ -3,8 +3,7 @@
 `GET /?page&source&category&search` re-expressed as ONE parameterized
 Catalyst plan per call instead of five SQL statements:
 
-    filter(source) → filter(category) → text_match(q) → rank → order →
-    paginate
+    filter(source ∧ category ∧ text_match(q)) → rank → order → paginate
 
 plus companions `distinct_values` (A2, dropdown dims) and `count_with_filters`
 (A1, pagination math). Ordering: relevance `ts_rank DESC` analog when
@@ -20,6 +19,8 @@ so that one task never holds more than the driver receives.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -30,6 +31,17 @@ from nashville_etl_service_backup_spark.functions.text import (
     text_rank,
 )
 from nashville_etl_service_backup_spark.operators.pagination import PER_PAGE, paginate
+
+
+def _filtered(
+    events: DataFrame, source: str | None, category: str | None, *more: Column
+) -> DataFrame:
+    """P5 (db_extractor.py:33-46): the page's dropdown filters plus any
+    further predicates, as one filter; shared by the page select and its
+    count."""
+    dims = (("source", source), ("category", category))
+    preds = [F.col(c) == v for c, v in dims if v is not None] + list(more)
+    return events.filter(reduce(Column.__and__, preds)) if preds else events
 
 
 def query_events(
@@ -43,27 +55,31 @@ def query_events(
     token_col: str = "search_tokens",
     search_cols: tuple[str, ...] = ("name", "venue_name", "venue_address", "description"),
 ) -> DataFrame:
-    """db_extractor.py:19-63 as one lazy plan over a canonical events frame."""
-    df = events
-    if token_col not in df.columns:
-        df = df.withColumn(token_col, search_tokens(*[F.col(c) for c in search_cols]))
-    if source is not None:
-        df = df.filter(F.col("source") == source)
-    if category is not None:
-        df = df.filter(F.col("category") == category)
+    """db_extractor.py:19-63 as one lazy plan over a canonical events frame.
+
+    The token array is built only when the view searches (a precomputed
+    `token_col` is reused); `token_col` never reaches the output."""
     if search:
+        if token_col in events.columns:
+            toks = F.col(token_col)
+        else:
+            toks = search_tokens(*[F.col(c) for c in search_cols])
         q = query_tokens(search)
-        df = df.filter(text_match(F.col(token_col), q)).withColumn(
-            "score", F.round(text_rank(F.col(token_col), q), 6)
+        df = _filtered(events, source, category, text_match(toks, q)).select(
+            *[c for c in events.columns if c != token_col],
+            F.round(text_rank(toks, q), 6).alias("score"),
         )
         order: list[Column] = [F.desc("score"), F.asc(unique_key)]
     else:
+        df = _filtered(events, source, category)
+        if token_col in events.columns:
+            df = df.drop(token_col)
         order = [
             F.asc_nulls_last("event_date"),
             F.asc("name"),
             F.asc(unique_key),
         ]
-    return paginate(df.drop(token_col), order, page=page, per_page=per_page)
+    return paginate(df, order, page=page, per_page=per_page)
 
 
 def search_topk_posting(
@@ -147,9 +163,4 @@ def count_with_filters(
     category: str | None = None,
 ) -> DataFrame:
     """A1 (db_extractor.py:47-50)."""
-    df = events
-    if source is not None:
-        df = df.filter(F.col("source") == source)
-    if category is not None:
-        df = df.filter(F.col("category") == category)
-    return df.agg(F.count(F.lit(1)).alias("total"))
+    return _filtered(events, source, category).agg(F.count(F.lit(1)).alias("total"))

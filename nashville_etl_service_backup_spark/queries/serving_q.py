@@ -19,6 +19,7 @@ from nashville_etl_service_backup_spark.functions.text import (
     text_rank,
 )
 from nashville_etl_service_backup_spark.operators.pagination import paginate
+from nashville_etl_service_backup_spark.operators.serving import distinct_values
 from nashville_etl_service_backup_spark.queries._util import (
     DUCK_TOKENS_DISTINCT,
     dsum,
@@ -88,13 +89,7 @@ def q_paginate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_distinct_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 (db_extractor.py:28-32): dropdown dimension values."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.select("event_type")
-        .where(F.col("event_type").isNotNull())
-        .distinct()
-        .orderBy("event_type")
-    )
+    return distinct_values(load(spark, sf_dir, "events"), "event_type")
 
 
 def q_count_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -42,6 +42,26 @@ def test_training_learns_separable_toy(spark):
     assert acc == 1.0
 
 
+def test_adaptive_off_restores_the_key_as_it_found_it(spark):
+    """Training turns AQE off for its rounds only: a session value comes
+    back as it was, and a key that was never set goes back to unset."""
+    key = "spark.sql.adaptive.enabled"
+    feats = standardize(_toy(spark), ["x1", "x2"])
+    before = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "true")
+        logreg_train(feats, ["x1", "x2"], "y", iterations=1)
+        assert spark.conf.get(key, None) == "true"
+        spark.conf.unset(key)
+        logreg_train(feats, ["x1", "x2"], "y", iterations=1)
+        assert spark.conf.get(key, None) is None
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
 def test_training_is_partition_invariant(spark):
     """Decimal gradient sums are order-independent: the trained weights
     must be bit-identical whatever the input partitioning."""

@@ -66,16 +66,17 @@ def test_topk_is_take_ordered(spark):
 
 def test_paginate_is_topk_not_global_window(spark):
     """O3: pagination must be TakeOrderedAndProject (top page*per_page
-    heap) — the row_number window may only run AFTER the limit, i.e. over
-    a page-sized frame, never over the full table (the single-partition
-    global-sort scale-killer)."""
+    heap that applies the OFFSET itself) — never a window over the table
+    (the single-partition global-sort scale-killer)."""
     plan = plan_of(spark, "q_paginate_events")
     # the limit exists and plans as a top-k heap: this is what bounds the
-    # rows reaching the numbering window to page*per_page
+    # rows past the scan to page*per_page
     assert "TakeOrderedAndProject" in plan
     # no global sort anywhere (the pre-fix shape had none either, but a
     # naive orderBy-without-limit regression would reintroduce one)
     assert "rangepartitioning" not in plan
+    # the OFFSET needs no row numbering
+    assert "Window" not in plan
 
 
 def test_semi_anti_join_strategies(spark):

@@ -105,14 +105,12 @@ def test_paginate_partitions_the_ordered_stream(spark, page, per_page, n_rows):
         (r["k"], r["uid"])
         for r in df.orderBy(*order).collect()
     ]
-    got = [
-        (r["k"], r["uid"])
-        for r in paginate(df, order, page=page, per_page=per_page)
-        .orderBy(*order)
-        .collect()
-    ]
+    pg = paginate(df, order, page=page, per_page=per_page)
+    got = [(r["k"], r["uid"]) for r in pg.orderBy(*order).collect()]
     lo, hi = (page - 1) * per_page, page * per_page
     assert got == full[lo:hi]
+    # the page already arrives in order
+    assert [(r["k"], r["uid"]) for r in pg.collect()] == full[lo:hi]
 
 
 @SLOW

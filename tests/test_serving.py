@@ -113,11 +113,69 @@ def test_distinct_values_job_budget(spark, tmp_path):
     assert len(jobs) <= 2, jobs
 
 
-def test_paginate_keep_row_number(spark):
+@pytest.mark.parametrize("page, per_page", [(0, 25), (-1, 25), (1, 0), (2, -3)])
+def test_paginate_rejects_bad_bounds(spark, page, per_page):
+    """Pages and page sizes start at 1: page 0 is not an empty page and
+    a negative OFFSET is an error, as in the reference's Postgres."""
     df = spark.range(10).withColumnRenamed("id", "k")
-    page = paginate(df, [F.asc("k")], page=2, per_page=3, keep_row_number=True)
-    rows = page.collect()
-    assert [(r.k, r.row_num) for r in rows] == [(3, 4), (4, 5), (5, 6)]
+    with pytest.raises(ValueError):
+        paginate(df, [F.asc("k")], page=page, per_page=per_page)
+
+
+def _sink(events, tmp_path):
+    """``events`` as a several-file parquet sink, read back the way the
+    page view reads it."""
+    path = str(tmp_path / "events")
+    events.repartition(3).write.parquet(path)
+    return events.sparkSession.read.parquet(path)
+
+
+@pytest.mark.parametrize(
+    "shape",
+    [{}, {"source": "Yelp"}, {"category": "Music"}, {"search": "jazz main smooth"}],
+    ids=["browse", "source", "category", "search"],
+)
+def test_query_events_job_budget(spark, events, tmp_path, shape, request):
+    """The page select is one TakeOrderedAndProject: one job per
+    collect, no Window and no adaptive plan for AQE to re-plan."""
+    sink = _sink(events, tmp_path)
+    want = [tuple(r) for r in query_events(events, **shape).collect()]
+    page = query_events(sink, **shape)
+    sc = spark.sparkContext
+    group = request.node.name
+    sc.setJobGroup(group, "query_events")
+    try:
+        got = [tuple(r) for r in page.collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == want and got
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    plan = page._jdf.queryExecution().executedPlan().toString()
+    assert "AdaptiveSparkPlan" not in plan
+    assert "Window" not in plan
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_query_events_precomputed_tokens(events):
+    """A frame that already carries the token column is searched through
+    it, and the column never reaches the output."""
+    from nashville_etl_service_backup_spark.functions.text import search_tokens
+
+    cols = ("name", "venue_name", "venue_address", "description")
+    tokenized = events.withColumn(
+        "search_tokens", search_tokens(*[F.col(c) for c in cols])
+    )
+    browse = query_events(tokenized)
+    assert browse.columns == events.columns
+    assert browse.collect() == query_events(events).collect()
+    for q in ("jazz", "jazz food", "main"):
+        got = query_events(tokenized, search=q)
+        assert got.columns == events.columns + ["score"]
+        assert got.collect() == query_events(events, search=q).collect()
+    # the column is searched as given, not rebuilt from `search_cols`
+    names_only = events.withColumn("search_tokens", search_tokens(F.col("name")))
+    assert query_events(names_only, search="main").collect() == []
 
 
 def test_page_count(spark):
