@@ -25,7 +25,6 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from nashville_etl_service_backup_spark.functions.text import tokenize
 
@@ -77,18 +76,6 @@ def exact_dedup_groups(
             F.min(id_col).alias(f"min_{id_col}"),
         )
         .filter(F.col("n_docs") > 1)
-    )
-
-
-def exact_dedup(df: DataFrame, id_col: str, fingerprint: Column) -> DataFrame:
-    """Keep one representative (min id) per fingerprint — the scalable
-    dropDuplicates: one shuffle on the hash, map-side combinable."""
-    w_id = F.col(id_col)
-    return (
-        df.withColumn("_fp", fingerprint)
-        .withColumn("_keep", F.min(w_id).over(Window.partitionBy("_fp")))
-        .filter(w_id == F.col("_keep"))
-        .drop("_fp", "_keep")
     )
 
 
@@ -395,13 +382,6 @@ def simhash64_from_hashes(hashes: Column) -> Column:
     )
     bits = F.transform(votes, lambda v: F.when(v > 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat_ws("", bits)
-
-
-def simhash64(tokens: Column) -> Column:
-    """Single-expression convenience form (token md5s recomputed per
-    bit — fine for unit tests/small frames; the pairs operator below
-    stages the hashing once instead)."""
-    return simhash64_from_hashes(F.transform(tokens, F.md5))
 
 
 def simhash_pairs_from_sigs(

@@ -201,46 +201,6 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     ).mapInPandas(decode, schema=AUDIO_FEATURES_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("resized", T.BinaryType(), True),
-    ]
-)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: binary in → binary out through an Arrow-batched
-    mapInPandas stage. The stub produces a deterministic fake "resized"
-    payload (md5 of content + target dims, repeated to width×height
-    bytes — a stand-in for a decoded-and-scaled pixel buffer); a real
-    implementation swaps in PIL's resize, same signature and plan."""
-
-    def resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        out_len = width * height
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                seed = hashlib.md5(
-                    bytes(content) + f"|{width}x{height}".encode()
-                ).digest()
-                payload = (seed * (out_len // len(seed) + 1))[:out_len]
-                rows.append((int(mid), width, height, payload))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "resized"]
-            )
-
-    from nashville_etl_service_backup_spark.operators import spread
-
-    return spread(media.select("media_id", "content")).mapInPandas(
-        resize, schema=RESIZED_SCHEMA
-    )
-
-
 def sample_frames(
     media: DataFrame, frame_bytes: int = 64, every: int = 4
 ) -> DataFrame:

@@ -103,8 +103,7 @@ def search_topk_posting(
     per query (two array_intersect passes: match + rank); here the
     exploded stream is filtered to query-term HITS before the shuffle,
     so the exchanged volume is the posting list for the query's terms,
-    not the corpus — the same explode-early device as
-    bm25_topk_posting (text_analysis.py:473). Score definition
+    not the corpus. Score definition
     unchanged from text_rank (F15, db_extractor.py:44-51 analog):
     AND-matched docs have |tokens ∩ query| == |query|, so
     round(n_matched / n_distinct_tokens, 6) is the identical double.

@@ -266,18 +266,6 @@ def bag_fingerprint(text: Column) -> Column:
     return F.md5(F.array_join(F.array_sort(search_tokens(text)), " "))
 
 
-def rolling_hash(text: Column, mod: int = 1_000_000_007, base: int = 31) -> Column:
-    """Polynomial rolling hash over the normalized text's characters —
-    the classic Rabin-Karp document fingerprint, as a higher-order fold
-    (exact int arithmetic via pmod at every step, no overflow)."""
-    chars = F.split(normalize_text(text), "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: F.pmod(acc * base + F.coalesce(F.ascii(c), F.lit(0)), F.lit(mod)),
-    )
-
-
 def bm25_topk(
     docs,
     id_col: str,
@@ -442,71 +430,6 @@ def contamination_matches(
         .join(ev, "gram")
         .groupBy(id_col)
         .agg(F.count_distinct(F.col("gram")).alias("n_shared_grams"))
-    )
-
-
-def bm25_topk_posting(
-    docs,
-    id_col: str,
-    text_col: str,
-    query_terms: list[str],
-    k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-):
-    """Posting-list BM25 for LARGE or variable query-term sets.
-
-    The fixed-term variant above compiles one HOF filter per term —
-    each re-scans the token array, so its cost is O(terms × tokens) per
-    document: right for a handful of serving-layer terms, linear blowup
-    at 50+. This variant computes every (doc, term) tf in ONE
-    explode-and-filter pass regardless of term count:
-
-        explode(tokens) → filter term ∈ query set (hash-set `isin`)
-        → groupBy (doc, term) count            [map-side combinable]
-        → join dl (per-doc) + broadcast df/N/avgdl → per-term partials
-        → groupBy doc sum → top-k
-
-    At 100 TB the explode stream is filtered to query-term hits BEFORE
-    the shuffle, so the exchanged volume is the posting list, not the
-    corpus. Deliberate divergence: documents matching no query term are
-    absent (score would be 0); the fixed-term variant emits them with
-    score 0 — callers wanting the zero tail should union it in.
-    """
-    from pyspark.sql import functions as F
-
-    toks = tokenize(F.col(text_col))
-    base = docs.select(F.col(id_col), toks.alias("_toks"))
-    dl = base.select(F.col(id_col), F.size("_toks").alias("dl"))
-    tf = (
-        base.select(F.col(id_col), F.explode("_toks").alias("term"))
-        .filter(F.col("term").isin(query_terms))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    corpus = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
-    df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
-    tfd = F.col("tf").cast("double")
-    dfd = F.col("df").cast("double")
-    idf = F.log(
-        F.lit(1.0) + (F.col("n_docs") - dfd + F.lit(0.5)) / (dfd + F.lit(0.5))
-    )
-    part = idf * tfd * F.lit(k1 + 1.0) / (
-        tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / avgdl)
-    )
-    return (
-        tf.join(dl, id_col)
-        .join(F.broadcast(df_t), "term")
-        .join(F.broadcast(corpus))
-        .select(F.col(id_col), part.alias("_part"))
-        .groupBy(id_col)
-        .agg(F.sum("_part").alias("_score"))
-        .select(F.col(id_col), F.round("_score", 6).alias("bm25"))
-        .orderBy(F.desc("bm25"), F.asc(id_col))
-        .limit(k)
     )
 
 

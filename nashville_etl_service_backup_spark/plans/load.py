@@ -88,42 +88,6 @@ def export_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed-table write — the 100 TB co-location technique:
-    both sides of a recurring equi-join written with the same
-    (bucket_col, n_buckets) join WITHOUT an Exchange (shuffle happens
-    once at write time, then every downstream join/aggregation on the
-    bucket key is shuffle-free). The reference has no analog (Postgres
-    btree serves this role, init.sql:22-23); at Spark scale this is the
-    replacement for its serving indexes."""
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col is not None:
-        w = w.sortBy(sort_col)
-    w.format("parquet").saveAsTable(table)
-
-
-def export_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC export — the second columnar interchange format next to
-    parquet (Spark ships a native vectorized ORC reader/writer; Hive/
-    Trino ecosystems frequently hand data over as ORC). Same pushdown
-    contract as parquet: predicates and column pruning reach the ORC
-    scan (PushedFilters/ReadSchema — plan-audited in test_sources),
-    so a consumer reading the export pays only for what it asks."""
-    df.write.mode(mode).orc(path)
-
-
-def scan_orc(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar ORC scan with full Catalyst pushdown."""
-    return spark.read.orc(path)
-
-
 def jdbc_driver_available(spark: SparkSession, driver_class: str) -> bool:
     """True if `driver_class` is loadable on the JVM classpath — gates
     the JDBC path in environments without a driver jar."""
@@ -173,7 +137,7 @@ def write_jdbc_upsert(
     `INSERT ... ON CONFLICT (url) DO NOTHING`
     (transform_data.py:566-600). Engine-portable form: read the
     EXISTING KEY COLUMN from the target (column-pruned JDBC scan),
-    left-anti join the incoming batch, append only the fresh rows.
+    `dedup_new_rows` against it, append only the fresh rows.
     First write creates the table (Spark JDBC append-on-absent).
 
     Not row-transactional: the read-check-append races a concurrent
@@ -192,28 +156,18 @@ def write_jdbc_upsert(
     if driver:
         reader = reader.option("driver", driver)
     try:
-        existing_keys = reader.load().select(key_col).distinct()
+        existing = reader.load().select(F.col(key_col).alias("url"))
     except Exception as exc:
         if not _is_table_absent_error(exc):
             raise
-        existing_keys = None  # table absent → first write creates it
-    fresh = df.dropDuplicates([key_col])
-    if existing_keys is not None:
-        fresh = fresh.join(existing_keys, key_col, "left_anti")
+        existing = None  # table absent → first write creates it
+    # dedup_new_rows keys on `url`: carry key_col under that name
+    fresh = dedup_new_rows(df.withColumnRenamed(key_col, "url"), existing)
+    fresh = fresh.withColumnRenamed("url", key_col)
     writer = fresh.write.format("jdbc").option("url", url).option("dbtable", table)
     if driver:
         writer = writer.option("driver", driver)
     writer.mode("append").save()
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Hive-style partitioned parquet write: equality/IN predicates on
-    the partition columns prune entire directories at plan time
-    (PartitionFilters), the Spark replacement for the reference's
-    `(source, event_date, name)` btree-assisted scans."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
 def scd2_merge(

@@ -21,7 +21,6 @@ from nashville_etl_service_backup_spark.operators.dedup import (
     minhash_signature,
     ngram_jaccard_pairs,
     resolve_duplicates,
-    shingles,
     simhash_near_dup_pairs,
 )
 from nashville_etl_service_backup_spark.operators.similarity import (
@@ -1297,6 +1296,25 @@ def _qc_head() -> str:
     return base[: base.index("nn AS MATERIALIZED (")].rstrip().rstrip(",")
 
 
+def _qc_features(spark: SparkSession, sf_dir: str, *extra: Column) -> DataFrame:
+    """The Spark twin of _qc_head()'s raw features: (doc_id, y, x1, x2,
+    x3, *extra) over the documents, y the teacher label quality ≥ 0.64
+    and x1..x3 the uniq_ratio / stop_ratio / length signals that the
+    quality-classifier queries standardize and train on."""
+    qf = quality_features(F.col("text"))
+    nt_d = qf["n_tokens"].cast("double")
+    return load(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.when(qf["quality"] >= 0.64, F.lit(1.0))
+        .otherwise(F.lit(0.0))
+        .alias("y"),
+        qf["uniq_ratio"].alias("x1"),
+        qf["stop_ratio"].alias("x2"),
+        F.round(F.least(nt_d / F.lit(300.0), F.lit(1.0)), 6).alias("x3"),
+        *extra,
+    )
+
+
 def _md5_bucket_sql(mod: int) -> str:
     """Deterministic md5(doc_id) hash bucket in [0, mod) — the DuckDB
     twin of the engine's conv(substr(md5, 1, 8), 16, 10) % mod fold
@@ -1449,7 +1467,7 @@ LIMIT 10"""
 
 
 # bit i of a token's md5 lives in hex digit i//4, nibble shift 3-i%4 —
-# identical derivation to operators.dedup.simhash64
+# identical derivation to operators.dedup.simhash64_from_hashes
 _SIMHASH_SIG = """array_to_string(list_transform(range(0, 64), i ->
       CASE WHEN list_sum(list_transform(hs, hx ->
         CASE WHEN CAST(floor((strpos('0123456789abcdef',
@@ -3204,18 +3222,8 @@ def text_score_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         standardize,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    qf = quality_features(F.col("text"))
-    nt_d = qf["n_tokens"].cast("double")
-    raw = docs.select(
-        "doc_id",
-        F.when(qf["quality"] >= 0.64, F.lit(1.0))
-        .otherwise(F.lit(0.0))
-        .alias("y"),
-        qf["uniq_ratio"].alias("x1"),
-        qf["stop_ratio"].alias("x2"),
-        F.round(F.least(nt_d / F.lit(300.0), F.lit(1.0)), 6).alias("x3"),
-        (split_assign(F.col("doc_id")) == "train").alias("is_tr"),
+    raw = _qc_features(
+        spark, sf_dir, (split_assign(F.col("doc_id")) == "train").alias("is_tr")
     )
     fcols = ["x1", "x2", "x3"]
     feats = track_persist(standardize(raw, fcols))
@@ -4180,18 +4188,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         standardize,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    qf = quality_features(F.col("text"))
-    nt_d = qf["n_tokens"].cast("double")
-    raw = docs.select(
-        "doc_id",
-        F.when(qf["quality"] >= 0.64, F.lit(1.0))
-        .otherwise(F.lit(0.0))
-        .alias("y"),
-        qf["uniq_ratio"].alias("x1"),
-        qf["stop_ratio"].alias("x2"),
-        F.round(F.least(nt_d / F.lit(300.0), F.lit(1.0)), 6).alias("x3"),
-    )
+    raw = _qc_features(spark, sf_dir)
     fcols = ["x1", "x2", "x3"]
     feats = track_persist(standardize(raw, fcols))
     w = logreg_train(feats, fcols, "y", iterations=8, lr=4.0)
@@ -4365,18 +4362,7 @@ def text_classifier_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         standardize,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    qf = quality_features(F.col("text"))
-    nt_d = qf["n_tokens"].cast("double")
-    raw = docs.select(
-        "doc_id",
-        F.when(qf["quality"] >= 0.64, F.lit(1.0))
-        .otherwise(F.lit(0.0))
-        .alias("y"),
-        qf["uniq_ratio"].alias("x1"),
-        qf["stop_ratio"].alias("x2"),
-        F.round(F.least(nt_d / F.lit(300.0), F.lit(1.0)), 6).alias("x3"),
-    )
+    raw = _qc_features(spark, sf_dir)
     fcols = ["x1", "x2", "x3"]
     feats = track_persist(standardize(raw, fcols))
     return logreg_cv(feats, fcols, "y", "doc_id", k=3)
@@ -4614,18 +4600,7 @@ def text_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_bucket,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    qf = quality_features(F.col("text"))
-    nt_d = qf["n_tokens"].cast("double")
-    raw = docs.select(
-        "doc_id",
-        F.when(qf["quality"] >= 0.64, F.lit(1.0))
-        .otherwise(F.lit(0.0))
-        .alias("y"),
-        qf["uniq_ratio"].alias("x1"),
-        qf["stop_ratio"].alias("x2"),
-        F.round(F.least(nt_d / F.lit(300.0), F.lit(1.0)), 6).alias("x3"),
-    )
+    raw = _qc_features(spark, sf_dir)
     fcols = ["x1", "x2", "x3"]
     feats = track_persist(
         standardize(raw, fcols).withColumn(
@@ -4661,14 +4636,14 @@ def text_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # division is exact for any realistic n, floor matches the oracle)
     k = (F.lit(9) * (F.col("n_cal") + 1) + F.lit(9)) / 10
     cum = cum.withColumn("k", F.floor(k).cast("long"))
-    # n_cal/k are constant across rows, so min() reads them exactly
-    qhat = (
-        cum.filter(F.col("cum") >= F.col("k"))
-        .agg(
-            F.min("s").alias("qhat"),
-            F.min("n_cal").alias("n_cal"),
-            F.min("k").alias("k"),
-        )
+    # n_cal/k are constant across rows, so min() reads them exactly.
+    # No `cum >= k` filter first: a fold under 9 rows never reaches k,
+    # and the oracle's kk CTE still reports its n_cal and k (an empty
+    # fold: 0 and 1).
+    qhat = cum.agg(
+        F.min(F.when(F.col("cum") >= F.col("k"), F.col("s"))).alias("qhat"),
+        F.coalesce(F.min("n_cal"), F.lit(0)).alias("n_cal"),
+        F.coalesce(F.min("k"), F.lit(1)).alias("k"),
     )
     test = feats.filter(F.col("_b") == 0).select(
         F.col("y").cast("int").alias("label"),
@@ -4676,8 +4651,9 @@ def text_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.alias("s0"),
     )
     t = test.crossJoin(F.broadcast(qhat))
-    in0 = (F.col("s0") <= F.col("qhat")).cast("int")
-    in1 = (F.col("s1") <= F.col("qhat")).cast("int")
+    # a NULL qhat covers nothing: 0, as the oracle's CASE … ELSE 0
+    in0 = F.when(F.col("s0") <= F.col("qhat"), 1).otherwise(0)
+    in1 = F.when(F.col("s1") <= F.col("qhat"), 1).otherwise(0)
     covered = F.when(F.col("label") == 1, in1).otherwise(in0)
     return (
         t.groupBy("label")

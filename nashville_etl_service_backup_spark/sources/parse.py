@@ -29,6 +29,7 @@ from nashville_etl_service_backup_spark.functions.geo import (
     LAT_RANGE,
     LNG_RANGE,
 )
+from nashville_etl_service_backup_spark.functions.text import truncate_with_ellipsis
 
 # nashville_arcgis.py:21-22
 INVALID_STRINGS = ["none", "", "unknown", "n/a", "na", "unnamed", "null"]
@@ -419,11 +420,7 @@ def parse_arcgis(
         F.when(
             _valid_str(attrs[fld]).isNotNull(),
             F.concat(
-                F.lit(f"{fld}: "),
-                F.substring(F.trim(attrs[fld]), 1, 100),
-                F.when(F.length(F.trim(attrs[fld])) > 100, "...").otherwise(
-                    F.lit("")
-                ),
+                F.lit(f"{fld}: "), truncate_with_ellipsis(F.trim(attrs[fld]), 100)
             ),
         )
         for fld in extra_fields

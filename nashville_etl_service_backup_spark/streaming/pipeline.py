@@ -14,8 +14,8 @@ become:
   ON CONFLICT).
 - T5: destructive refresh = overwrite load (plans.load, mode='overwrite').
 
-Plus the windowed-aggregation surface the target engine needs
-(watermark + tumbling/sliding/session windows over an event stream).
+Batch tumbling/sliding/session windows are registry queries
+(q_tumbling_window, q_sliding_window, q_session_window).
 """
 
 from __future__ import annotations
@@ -60,67 +60,6 @@ def incremental_etl(
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def windowed_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str | None = None,
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    group_cols: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
-    """Watermarked tumbling/sliding window aggregation — works on both a
-    streaming frame (late data dropped past the watermark) and a batch
-    frame (watermark is a no-op)."""
-    win = (
-        F.window(F.col(ts_col), window, slide)
-        if slide
-        else F.window(F.col(ts_col), window)
-    )
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(win.alias("w"), *[F.col(c) for c in group_cols])
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            *group_cols,
-            "n",
-            "total_value",
-        )
-    )
-
-
-def session_windows(
-    events: DataFrame,
-    gap: str = "10 minutes",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Session windows (gap-based) per key — F.session_window, the
-    streaming-native operator; batch frames work too."""
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(
-            F.session_window(F.col(ts_col), gap).alias("w"), F.col(key_col)
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            key_col,
-            "n_events",
-        )
     )
 
 
@@ -214,52 +153,6 @@ def dedup_within_watermark(
     )
 
 
-def clicks_to_purchases_join(
-    events: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    watermark: str = "1 hour",
-    max_gap: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked stream-stream interval join: attribute each purchase
-    to the same user's click at most ``max_gap`` earlier — the classic
-    conversion-attribution shape. Both sides carry a watermark and the
-    join has a time-range predicate, so Spark can bound the buffered
-    state on each side and evict as watermarks advance (an unbounded
-    stream-stream join would grow state forever). Works identically on
-    batch frames (the watermark is a no-op there)."""
-    clicks = events.filter(F.col("event_type") == "click").select(
-        F.col(user_col).alias("c_user"),
-        F.col(ts_col).alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        F.col(user_col).alias("p_user"),
-        F.col(ts_col).alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    if events.isStreaming:
-        clicks = clicks.withWatermark("click_ts", watermark)
-        purchases = purchases.withWatermark("purchase_ts", watermark)
-    return purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {max_gap}")
-        ),
-    ).select(
-        F.col("p_user").alias("user_id"),
-        "purchase_id",
-        "purchase_ts",
-        "purchase_value",
-        "click_id",
-        "click_ts",
-    )
-
-
 def incremental_rollup(
     spark: SparkSession,
     events_path: str,
@@ -344,8 +237,8 @@ def incremental_cms(
     micro-batch builds its own CMS partial (operators.sketch.cms_build)
     and writes it to ``cms_path/batch_id=<id>/`` — the same
     idempotent-replay layout as incremental_rollup (replay overwrites
-    its own partial; counters are a commutative monoid, so readers merge
-    partials with cms_merge/read via one groupBy-sum). Heavy-hitter
+    its own partial; counters are a commutative monoid, so read_cms
+    merges the partials with cms_merge). Heavy-hitter
     queries over an unbounded stream without ever storing per-key state:
     the stored sketch is ≤ depth × width counters per batch, compactable
     the same way as the rollup."""
@@ -371,8 +264,9 @@ def incremental_cms(
 def read_cms(spark: SparkSession, cms_path: str) -> DataFrame:
     """Merge the committed per-batch CMS partials into one counter
     table (the read_rollup contract)."""
-    src = commitlog.read_committed(spark, cms_path)
-    return src.groupBy("row_idx", "bucket").agg(F.sum("cnt").alias("cnt"))
+    from nashville_etl_service_backup_spark.operators.sketch import cms_merge
+
+    return cms_merge(commitlog.read_committed(spark, cms_path))
 
 
 def incremental_hll(
@@ -411,11 +305,11 @@ def incremental_hll(
 
 def read_hll(spark: SparkSession, hll_path: str) -> DataFrame:
     """Merge the committed per-batch HLL register partials (max per
-    bucket)."""
-    src = commitlog.read_committed(spark, hll_path)
-    return src.groupBy("event_type", "bucket").agg(
-        F.max("register").alias("register")
-    )
+    bucket). hll_merge groups by every column it does not merge, so
+    the ``batch_id`` partition column goes first."""
+    from nashville_etl_service_backup_spark.operators.sketch import hll_merge
+
+    return hll_merge(commitlog.read_committed(spark, hll_path).drop("batch_id"))
 
 
 def read_rollup(
@@ -692,7 +586,10 @@ def incremental_bloom_gate(
     per-batch probe joins against a fixed-size table forever — the
     100 TB stream shape where key cardinality grows without bound but
     state must not. Audit rows: (batch_id, n_docs, n_flagged)."""
-    from nashville_etl_service_backup_spark.operators.sketch import _bucket
+    from nashville_etl_service_backup_spark.operators.sketch import (
+        _bucket,
+        bloom_merge,
+    )
 
     schema = "doc_id long, text string"
 
@@ -708,10 +605,8 @@ def incremental_bloom_gate(
             )
             store = _gate_store(batch, bloom_path, batch_id)
             if store is not None:
-                prior = (
-                    store.select("pos")
-                    .distinct()
-                    .withColumn("_h", F.lit(1))
+                prior = bloom_merge(store.select("pos")).withColumn(
+                    "_h", F.lit(1)
                 )
                 hits = pos.join(F.broadcast(prior), "pos", "left")
                 seen = (

@@ -140,32 +140,3 @@ def test_dedup_new_rows_anti_join(spark, raw_zone):
     assert fresh.count() == batch.count() - 2
     # replay idempotence (T4): loading the same batch twice adds nothing
     assert dedup_new_rows(batch, batch).count() == 0
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """K5 sibling: ORC export/scan round-trips values and the scan gets
-    predicate pushdown + column pruning like parquet."""
-    from pyspark.sql import functions as F
-
-    from nashville_etl_service_backup_spark.plans.load import (
-        export_orc,
-        scan_orc,
-    )
-
-    df = spark.range(1000).select(
-        F.col("id"),
-        (F.col("id") % 7).alias("k"),
-        F.concat(F.lit("v"), F.col("id")).alias("name"),
-    )
-    path = str(tmp_path / "orc_out")
-    export_orc(df, path)
-    back = scan_orc(spark, path)
-    assert back.count() == 1000
-    got = back.filter(F.col("k") == 3).select("id").orderBy("id")
-    assert [r["id"] for r in got.limit(3).collect()] == [3, 10, 17]
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = got._jdf.queryExecution().explainString(jmode)
-    assert "PushedFilters: [IsNotNull(k), EqualTo(k,3)]" in plan
-    assert "name" not in plan  # column pruning reached the ORC scan

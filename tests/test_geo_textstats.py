@@ -122,61 +122,6 @@ def test_zscore_by_group_moments(spark):
     assert out[4] is None  # singleton group
 
 
-def test_bm25_posting_matches_fixed_variant_on_many_terms(spark):
-    """The posting-list variant must agree with the per-term-HOF variant
-    on a 50-term query, and its plan must contain ONE explode instead of
-    one token-array rescan per term."""
-    from pyspark.sql import functions as F
-
-    from nashville_etl_service_backup_spark.operators.text_analysis import (
-        bm25_topk,
-        bm25_topk_posting,
-    )
-    from nashville_etl_service_backup_spark.tables import load
-
-    docs = load(spark, "/root/testdata/sf0.001", "documents")
-    # 50 distinct terms drawn from the corpus itself
-    terms = [
-        r[0]
-        for r in docs.select(
-            F.explode(F.split(F.lower("text"), "\\W+")).alias("t")
-        )
-        .filter(F.length("t") >= 2)
-        .groupBy("t")
-        .count()
-        .orderBy(F.desc("count"), F.asc("t"))
-        .limit(50)
-        .collect()
-    ]
-    assert len(terms) >= 25  # small sf0.001 vocabulary caps this
-
-    fixed = {
-        r[0]: r[1]
-        for r in bm25_topk(docs, "doc_id", "text", terms, k=15).collect()
-    }
-    posting = {
-        r[0]: r[1]
-        for r in bm25_topk_posting(docs, "doc_id", "text", terms, k=15).collect()
-    }
-    assert set(posting) == set(fixed)
-    for d, s in posting.items():
-        assert abs(s - fixed[d]) < 1e-4, (d, s, fixed[d])
-
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = (
-        bm25_topk_posting(docs, "doc_id", "text", terms, k=15)
-        ._jdf.queryExecution()
-        .explainString(jmode)
-    )
-    # posting passes don't scale with term count: two Generate nodes
-    # (tf branch + df branch), not one scan per term
-    assert plan.count("(Generate") + plan.count("+- Generate") <= 4
-    # no per-term higher-order rescans of the token array
-    assert "filter(" not in plan
-
-
 def test_pii_redact_and_counts(spark):
     from pyspark.sql import functions as F
 

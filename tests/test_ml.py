@@ -3,6 +3,7 @@ sigmoid logistic regression fit by fixed-iteration full-batch GD."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nashville_etl_service_backup_spark.operators.ml import (
@@ -482,6 +483,43 @@ def test_conformal_gate_marginal_coverage(spark):
     for r in rows:
         assert r["k"] == -(-9 * (r["n_cal"] + 1) // 10)  # ceil(0.9(n+1))
         assert 0.0 <= r["qhat"] <= 1.0
+
+
+@pytest.mark.parametrize("skip_cal", [False, True])
+def test_conformal_gate_small_calibration_fold(spark, tmp_path, skip_cal):
+    """A calibration fold of fewer than 9 rows never reaches k =
+    ceil(0.9(n+1)) > n: qhat is NULL but n_cal and k are still reported
+    (the oracle's kk CTE), and a NULL qhat covers no test row. With
+    skip_cal the fold is empty: n_cal 0, k 1."""
+    import hashlib
+    import os
+
+    from nashville_etl_service_backup_spark.queries.llmdata import (
+        text_conformal_gate,
+    )
+
+    # fold = md5(doc_id) bucket mod 5, as operators.text_analysis.hash_bucket
+    def fold(i):
+        return int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % 5
+
+    ids = [i for i in range(1, 31) if not (skip_cal and fold(i) == 1)]
+    words = "the river city music hall opens late with jazz and folk bands".split()
+    rows = [
+        (i, " ".join(words[j % len(words)] for j in range(i, i + 3 + 7 * (i % 5))))
+        for i in ids
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs.write.parquet(os.path.join(str(tmp_path), "documents.parquet"))
+    n = sum(1 for i in ids if fold(i) == 1)
+    assert n < 9 and (n == 0) == skip_cal
+
+    out = text_conformal_gate(spark, str(tmp_path)).collect()
+    assert sum(r["n_test"] for r in out) == sum(1 for i in ids if fold(i) == 0)
+    for r in out:
+        assert r["n_cal"] == n
+        assert r["k"] == (9 * (n + 1) + 9) // 10
+        assert r["qhat"] is None
+        assert r["n_covered"] == 0
 
 
 def test_calibration_curve_ece_consistency(spark):

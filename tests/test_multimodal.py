@@ -10,9 +10,7 @@ from pyspark.sql import functions as F
 from nashville_etl_service_backup_spark.operators.multimodal import (
     FRAME_SCHEMA,
     IMAGE_FEATURES_SCHEMA,
-    RESIZED_SCHEMA,
     extract_image_features,
-    resize_images,
     sample_frames,
     synth_media,
 )
@@ -74,17 +72,6 @@ def test_sample_frames_udtf_fanout(spark):
     expect = hashlib.md5(b[128:192]).hexdigest()
     got = {f.frame_idx: f.frame_md5 for f in frames}
     assert got[2] == expect
-
-
-def test_resize_images_stub_plumbing(spark):
-    media = synth_media(_docs(spark)).filter(F.col("media_id") == 0)
-    out = resize_images(media, 8, 4)
-    assert out.schema == RESIZED_SCHEMA
-    row = out.first()
-    assert (row.width, row.height) == (8, 4)
-    assert len(row.resized) == 32  # width*height bytes
-    seed = hashlib.md5(("a" * 100).encode() + b"|8x4").digest()
-    assert bytes(row.resized) == (seed * 3)[:32]
 
 
 def test_extract_runs_batched_not_per_row(spark):

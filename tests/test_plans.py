@@ -113,63 +113,6 @@ def test_serving_filters_prune_scan(spark):
     assert "GreaterThan(value,50.0)" in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located bucketed join: same bucketing on both sides ⇒ the
-    sort-merge join runs with ZERO Exchange nodes — the write-once,
-    shuffle-never property bucketing buys at 100 TB."""
-    from pyspark.sql import functions as F
-
-    from nashville_etl_service_backup_spark.plans.load import write_bucketed
-    from nashville_etl_service_backup_spark.tables import load
-
-    orders = load(spark, SF, "orders").select("o_orderkey", "o_orderpriority")
-    li = load(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(orders, "b_orders", "o_orderkey", 8)
-    write_bucketed(li, "b_lineitem", "l_orderkey", 8)
-    try:
-        bo = spark.table("b_orders")
-        bl = spark.table("b_lineitem")
-        # disable broadcast so the join would otherwise shuffle both sides
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bl.join(bo, bl["l_orderkey"] == bo["o_orderkey"])
-        jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        plan = joined._jdf.queryExecution().explainString(jmode)
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_partitioned_write_prunes(spark, tmp_path):
-    """Partition pruning: an equality predicate on the partition column
-    shows up as PartitionFilters and prunes to one directory."""
-    from pyspark.sql import functions as F
-
-    from nashville_etl_service_backup_spark.plans.load import (
-        write_partitioned,
-    )
-    from nashville_etl_service_backup_spark.tables import load
-
-    path = str(tmp_path / "events_by_type")
-    ev = load(spark, SF, "events")
-    write_partitioned(ev, path, ["event_type"])
-    back = spark.read.parquet(path).filter(F.col("event_type") == "purchase")
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = back._jdf.queryExecution().explainString(jmode)
-    assert "PartitionFilters" in plan and "event_type" in plan.split(
-        "PartitionFilters"
-    )[1].splitlines()[0]
-    n_purchase = ev.filter(F.col("event_type") == "purchase").count()
-    assert back.count() == n_purchase
-
-
 def test_bm25_stats_broadcast(spark):
     """BM25's corpus-stats join must be a broadcast (single-row build
     side), never a shuffle of the corpus."""

@@ -11,8 +11,6 @@ from pyspark.sql import functions as F
 from nashville_etl_service_backup_spark.streaming import commitlog
 from nashville_etl_service_backup_spark.streaming.pipeline import (
     incremental_etl,
-    session_windows,
-    windowed_counts,
 )
 
 
@@ -49,66 +47,6 @@ def test_incremental_etl_exactly_once(spark, tmp_path):
     out = spark.read.parquet(sink)
     assert out.count() == 3
     assert sorted(r.url for r in out.select("url").collect()) == ["u1", "u2", "u3"]
-
-
-def test_windowed_counts_batch_parity(spark):
-    rows = [
-        ("2024-01-01 10:05:00", "click", 1.0, 1),
-        ("2024-01-01 10:55:00", "click", 2.0, 1),
-        ("2024-01-01 11:05:00", "view", 3.0, 2),
-    ]
-    ev = spark.createDataFrame(rows, "t string, event_type string, value double, user_id long") \
-        .withColumn("ts", F.to_timestamp("t"))
-    out = windowed_counts(ev, "1 hour").collect()
-    got = {(str(r.window_start), r.event_type): r.n for r in out}
-    assert got[("2024-01-01 10:00:00", "click")] == 2
-    assert got[("2024-01-01 11:00:00", "view")] == 1
-
-
-def test_session_windows_gap(spark):
-    rows = [
-        ("2024-01-01 10:00:00", 1), ("2024-01-01 10:05:00", 1),  # session 1
-        ("2024-01-01 10:30:00", 1),                              # session 2
-        ("2024-01-01 10:00:00", 2),                              # other user
-    ]
-    ev = spark.createDataFrame(rows, "t string, user_id long").withColumn(
-        "ts", F.to_timestamp("t")
-    )
-    out = session_windows(ev, gap="10 minutes").collect()
-    per_user = {}
-    for r in out:
-        per_user.setdefault(r.user_id, []).append(r.n_events)
-    assert sorted(per_user[1]) == [1, 2]
-    assert per_user[2] == [1]
-
-
-@pytest.mark.slow
-def test_streaming_windowed_counts_with_watermark(spark, tmp_path):
-    """Real readStream: rate-limited file source + watermarked tumbling
-    window, AvailableNow to completion."""
-    src = str(tmp_path / "stream_src")
-    rows = [("2024-01-01 10:05:00", "click", 1.0), ("2024-01-01 10:55:00", "click", 2.0)]
-    df = spark.createDataFrame(rows, "t string, event_type string, value double") \
-        .select(F.to_timestamp("t").alias("ts"), "event_type", "value")
-    df.coalesce(1).write.parquet(src)
-    stream = (
-        spark.readStream.schema(df.schema).parquet(src)
-    )
-    agg = windowed_counts(stream, "1 hour", watermark="2 hours")
-    out_path = str(tmp_path / "out")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", str(tmp_path / "wckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append mode only emits windows past the watermark; with AvailableNow
-    # over a finite source the final watermark closes... verify no crash and
-    # checkpoint exists (emission semantics asserted in batch parity test)
-    assert (tmp_path / "wckpt").exists()
 
 
 @pytest.mark.slow
@@ -281,53 +219,6 @@ def test_dedup_within_watermark_stream(spark, tmp_path):
     # batch frame: same API, plain dropDuplicates
     batch = spark.read.parquet(src)
     assert dedup_within_watermark(batch, key_cols=("url",)).count() == 2
-
-
-@pytest.mark.slow
-def test_stream_stream_attribution_join(spark, tmp_path):
-    """Watermarked interval join attributes purchases to clicks ≤30 min
-    earlier; stream and batch agree."""
-    from datetime import datetime
-
-    from nashville_etl_service_backup_spark.streaming.pipeline import (
-        clicks_to_purchases_join,
-    )
-
-    src = str(tmp_path / "ev")
-    rows = [
-        (1, "2024-01-01T10:00:00", 7, "click", 0.0),
-        (2, "2024-01-01T10:20:00", 7, "purchase", 9.99),   # attributed to 1
-        (3, "2024-01-01T11:30:00", 7, "purchase", 5.0),    # no click within 30m
-        (4, "2024-01-01T10:05:00", 8, "click", 0.0),
-        (5, "2024-01-01T12:00:00", 8, "purchase", 3.0),    # too late
-    ]
-    spark.createDataFrame(
-        [(i, datetime.fromisoformat(t), u, e, v) for i, t, u, e, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, value double",
-    ).coalesce(1).write.parquet(src)
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = clicks_to_purchases_join(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("attrib")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["purchase_id"], r["click_id"])
-        for r in spark.sql("SELECT * FROM attrib").collect()
-    }
-    assert got == {(2, 1)}
-
-    batch_got = {
-        (r["purchase_id"], r["click_id"])
-        for r in clicks_to_purchases_join(spark.read.parquet(src)).collect()
-    }
-    assert batch_got == got
 
 
 @pytest.mark.slow
